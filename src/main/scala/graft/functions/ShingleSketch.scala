@@ -3,11 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.GraftSql
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused shingle sketch: from a token array, ONE native expression builds
@@ -103,6 +105,157 @@ object ShingleSketch {
   /** Column API: `struct(sh, sig)` from a token-array column. */
   def sketch(tokens: Column, width: Int, numHashes: Int): Column =
     GraftSql.column(Sketch(GraftSql.expression(tokens), width, numHashes))
+
+  // ------------------------------------------------------ LSH band keys
+
+  /** Banded-LSH keys of a signature: element b is
+    * `xxhash64(b, array_join(slice(sig, b·r+1, r), ","))` — the decimal
+    * renderings of the band's longs joined with commas, hashed with the
+    * int band index as the first child. The digits go straight into one
+    * byte buffer, so no per-element string is built (the lambda spelling
+    * interprets `transform` and renders every long as a UTF8String).
+    *
+    * Bit-compatibility contract: `array_join` skips null elements (and
+    * their separators); a band past the end of the array is the empty
+    * string; the hash chains `hashUnsafeBytes(utf8, hashInt(b, 42))`. A
+    * null signature is not a null result: the lambda maps the band
+    * sequence, its joined slice is null, and `xxhash64` skips a null
+    * child, so every key is `hashInt(b, 42)`. */
+  def computeBandKeys(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+    val out = new Array[Long](bands)
+    if (sig == null) {
+      var b = 0
+      while (b < bands) { out(b) = XXH64.hashInt(b, Seed); b += 1 }
+      return new GenericArrayData(out)
+    }
+    val n = sig.numElements()
+    // 20 bytes hold any long's decimal form ("-9223372036854775808"),
+    // plus one separator per element.
+    val buf = new Array[Byte](rowsPerBand * 21)
+    var b = 0
+    while (b < bands) {
+      val from = b.toLong * rowsPerBand
+      val until = math.min(from + rowsPerBand, n.toLong).toInt
+      var len = 0
+      var first = true
+      var i = from.toInt
+      while (i < until) {
+        if (!sig.isNullAt(i)) {
+          if (!first) { buf(len) = ','.toByte; len += 1 }
+          len = writeDecimal(sig.getLong(i), buf, len)
+          first = false
+        }
+        i += 1
+      }
+      out(b) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, XXH64.hashInt(b, Seed))
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  private val MinLongDigits = java.lang.Long.toString(Long.MinValue).getBytes("US-ASCII")
+
+  /** Writes `v` in decimal (`Long.toString` form) at `pos`; returns the end. */
+  private def writeDecimal(v: Long, buf: Array[Byte], pos: Int): Int =
+    if (v == Long.MinValue) {
+      System.arraycopy(MinLongDigits, 0, buf, pos, MinLongDigits.length)
+      pos + MinLongDigits.length
+    } else {
+      var p = pos
+      var x = v
+      if (x < 0) { buf(p) = '-'.toByte; p += 1; x = -x }
+      var digits = 1
+      var t = x / 10
+      while (t != 0) { digits += 1; t /= 10 }
+      var end = p + digits
+      while (end > p) { end -= 1; buf(end) = ('0' + (x % 10)).toByte; x /= 10 }
+      p + digits
+    }
+
+  case class BandKeys(child: Expression, bands: Int, rowsPerBand: Int)
+      extends UnaryExpression {
+    require(bands > 0 && rowsPerBand > 0, s"bad banding $bands x $rowsPerBand")
+    override def prettyName: String = "graft_lsh_band_keys"
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = false
+
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects array<bigint> signature, got ${other.simpleString}")
+    }
+
+    // A null signature still has keys (see computeBandKeys): no null
+    // propagation.
+    override def eval(input: InternalRow): Any =
+      computeBandKeys(child.eval(input).asInstanceOf[ArrayData], bands, rowsPerBand)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val c = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${c.code}
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.ShingleSketch.computeBandKeys(
+          ${c.isNull} ? null : ${c.value}, $bands, $rowsPerBand);""", isNull = FalseLiteral)
+    }
+
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** Column API: `bands` LSH keys from an `array<bigint>` signature. */
+  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    GraftSql.column(BandKeys(GraftSql.expression(sig), bands, rowsPerBand))
+
+  // ------------------------------------------------ sorted-set jaccard
+
+  /** Jaccard similarity of two ascending, distinct, null-free long arrays
+    * (the sketch's `sh`) by one merge walk: |A∩B| / (|A| + |B| - |A∩B|),
+    * 1.0 when both are empty. On such arrays it equals
+    * `size(array_intersect) / size(array_union)` bit for bit — the same
+    * two integers divided as doubles — without the hash sets those
+    * build per pair. Unsorted or repeated input gives a wrong answer, not
+    * an error. */
+  def computeSortedJaccard(a: ArrayData, b: ArrayData): Double = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    val uni = na + nb - inter
+    if (uni == 0) 1.0 else inter.toDouble / uni.toDouble
+  }
+
+  case class SortedJaccard(left: Expression, right: Expression) extends BinaryExpression {
+    override def prettyName: String = "graft_sorted_jaccard"
+    override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
+
+    override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects (array<bigint>, array<bigint>), got (${l.simpleString}, ${r.simpleString})")
+    }
+
+    override def nullSafeEval(a: Any, b: Any): Any =
+      computeSortedJaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) =>
+        s"${ev.value} = graft.functions.ShingleSketch.computeSortedJaccard($a, $b);")
+
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
+  }
+
+  /** Column API: jaccard of two sorted distinct `array<bigint>` sets. */
+  def sortedJaccard(a: Column, b: Column): Column =
+    GraftSql.column(SortedJaccard(GraftSql.expression(a), GraftSql.expression(b)))
 
   // ------------------------------------------------- positional variant
 

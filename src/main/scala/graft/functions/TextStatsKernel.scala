@@ -185,18 +185,20 @@ object TextStatsKernel {
       ratio(upper), stopRatio, repetition)
   }
 
+  private val QualityStatsType = StructType(Seq(
+    StructField("n_chars", IntegerType, nullable = false),
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("mean_token_len", DoubleType, nullable = false),
+    StructField("alpha_ratio", DoubleType, nullable = false),
+    StructField("punct_ratio", DoubleType, nullable = false),
+    StructField("digit_ratio", DoubleType, nullable = false),
+    StructField("upper_ratio", DoubleType, nullable = false),
+    StructField("stopword_ratio", DoubleType, nullable = false),
+    StructField("repetition", DoubleType, nullable = false)))
+
   case class QualityStats(child: Expression) extends UnaryExpression {
     override def prettyName: String = "graft_quality_stats"
-    override def dataType: DataType = StructType(Seq(
-      StructField("n_chars", IntegerType, nullable = false),
-      StructField("n_tokens", IntegerType, nullable = false),
-      StructField("mean_token_len", DoubleType, nullable = false),
-      StructField("alpha_ratio", DoubleType, nullable = false),
-      StructField("punct_ratio", DoubleType, nullable = false),
-      StructField("digit_ratio", DoubleType, nullable = false),
-      StructField("upper_ratio", DoubleType, nullable = false),
-      StructField("stopword_ratio", DoubleType, nullable = false),
-      StructField("repetition", DoubleType, nullable = false)))
+    override def dataType: DataType = QualityStatsType
     override def nullable: Boolean = true
 
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -218,6 +220,54 @@ object TextStatsKernel {
   /** Column API: struct of the nine quality features. */
   def quality(text: Column): Column =
     GraftSql.column(QualityStats(GraftSql.expression(text)))
+
+  /** Quality score in [0,1] of a [[QualityStats]] row: the fraction of
+    * seven Gopher/C4-style checks the document passes. Row form of
+    * [[graft.llm.TextAnalysis.qualityScore]], pinned against it (same
+    * comparisons, same left-to-right double sum, same division by 7). */
+  def score(f: InternalRow): Double = {
+    def pass(ok: Boolean): Double = if (ok) 1.0 else 0.0
+    val nTokens = f.getInt(1)
+    val meanLen = f.getDouble(2)
+    (pass(nTokens >= 5) + pass(nTokens <= 100000) +
+      pass(meanLen >= 2 && meanLen <= 12) + pass(f.getDouble(3) >= 0.6) +
+      pass(f.getDouble(4) <= 0.25) + pass(f.getDouble(7) >= 0.05) +
+      pass(f.getDouble(8) <= 0.5)) / 7
+  }
+
+  /** The curation keep rule in one call: `score >= minQuality` and at least
+    * `minTokens` whitespace tokens (`n_tokens` is the same count as
+    * [[graft.llm.TextAnalysis.tokenCount]]). */
+  def keep(f: InternalRow, minQuality: Double, minTokens: Int): Boolean =
+    score(f) >= minQuality && f.getInt(1) >= minTokens
+
+  /** The keep rule over a [[QualityStats]] child, as ONE boolean node: a
+    * filter condition that reads several fields of the features struct
+    * would evaluate the kernel once per reference, because `FilterExec`
+    * does no common-subexpression elimination. */
+  case class QualityKeep(child: Expression, minQuality: Double, minTokens: Int)
+      extends UnaryExpression {
+    override def prettyName: String = "graft_quality_keep"
+    override def dataType: DataType = BooleanType
+    override def nullable: Boolean = true
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (child.dataType == QualityStatsType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects the graft_quality_stats struct, got ${child.dataType.simpleString}")
+    override def nullSafeEval(input: Any): Any =
+      keep(input.asInstanceOf[InternalRow], minQuality, minTokens)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, f =>
+        s"${ev.value} = graft.functions.TextStatsKernel.keep($f, " +
+          s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(minQuality)}L), " +
+          s"$minTokens);")
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** Column API: the keep rule (`score >= minQuality`, `>= minTokens`
+    * tokens) evaluating the quality kernel once per row. */
+  def qualityKeep(text: Column, minQuality: Double, minTokens: Int): Column =
+    GraftSql.column(QualityKeep(QualityStats(GraftSql.expression(text)), minQuality, minTokens))
 
   // ------------------------------------------------------ subword count
 

@@ -10,8 +10,10 @@ package graft.io
   *  - only for actions with NO data- or crash-ordering dependency;
   *  - the session's thread-local job description is not propagated —
   *    callers that care set it inside each branch;
-  *  - failures: the first throwable wins, the other branch is awaited
-  *    (Spark actions are not interrupted mid-flight), then it is rethrown.
+  *  - failures: every branch is awaited (Spark actions are not
+  *    interrupted mid-flight); the first branch's throwable (in argument
+  *    order) is rethrown with the other branches' failures attached as
+  *    suppressed exceptions.
   */
 object Par {
 
@@ -27,8 +29,7 @@ object Par {
     t.join()
     (ra, rb) match {
       case (Right(x), Right(y)) => (x, y)
-      case (Left(e), _) => throw e
-      case (_, Left(e)) => throw e
+      case _ => throw firstFailure(Seq(ra, rb))
     }
   }
 
@@ -45,7 +46,14 @@ object Par {
       t
     }
     ts.foreach(_.join())
-    results.collectFirst { case Left(e) => throw e }
+    if (results.exists(_.isLeft)) throw firstFailure(results.toSeq)
     results.toSeq.map(_.toOption.get.asInstanceOf[A])
+  }
+
+  /** The first failure, carrying every later one as suppressed. */
+  private def firstFailure(results: Seq[Either[Throwable, Any]]): Throwable = {
+    val errors = results.collect { case Left(e) => e }
+    errors.tail.filterNot(_ eq errors.head).foreach(errors.head.addSuppressed)
+    errors.head
   }
 }

@@ -141,18 +141,22 @@ object Dedup {
     * document — so no pipeline path may evaluate it; the fused native
     * kernel below computes the same hashes per row. */
   private[llm] def shingleSets(df: DataFrame, idCol: String, textCol: String,
-      width: Int): DataFrame =
-    sketchFrame(df, idCol, textCol, width, numHashes = 0)
+      width: Int, spread: Boolean = true): DataFrame =
+    sketchFrame(df, idCol, textCol, width, numHashes = 0, spread)
       .select(col("id"), col("__sk.sh").as("sh"))
 
   /** Fused per-row sketch (graft.functions.ShingleSketch): tokens ->
     * struct(sh, sig) in one native pass — no explode, no wide aggregate,
     * no shuffle; bit-identical to the legacy explode+aggregate pipeline
-    * (pinned in ShingleSketchSpec). */
+    * (pinned in ShingleSketchSpec). `spread = false` skips
+    * [[Similarity.parallelize]] for a frame the caller already spread: its
+    * partition count comes from `df.rdd`, which runs every exchange below
+    * an adaptive plan once just to count, and the sketch's own query then
+    * runs them again. */
   private def sketchFrame(df: DataFrame, idCol: String, textCol: String,
-      width: Int, numHashes: Int): DataFrame = {
+      width: Int, numHashes: Int, spread: Boolean = true): DataFrame = {
     val toks = split(trim(lower(col(textCol))), "\\s+")
-    Similarity.parallelize(df)
+    (if (spread) Similarity.parallelize(df) else df)
       .where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
         graft.functions.ShingleSketch.sketch(toks, width, numHashes).as("__sk"))
@@ -182,10 +186,13 @@ object Dedup {
   /** Banded LSH keys from a minhash signature: `bands` hashes, each over a
     * contiguous slice of rows-per-band signature entries. Two documents
     * share a key iff one band matches exactly — the classic S-curve
-    * candidate filter. */
+    * candidate filter. Native ([[graft.functions.ShingleSketch.bandKeys]]),
+    * bit-identical to the lambda spelling
+    * `xxhash64(b, array_join(slice(sig, b·r+1, r), ","))` for b in
+    * `0 until bands`, so band indexes built by [[minHashBandIndex]] and
+    * the stream guards that probe them keep matching. */
   def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, array_join(slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)), ",")))
+    graft.functions.ShingleSketch.bandKeys(signature, bands, rowsPerBand)
 
   /** Pick (bands, rowsPerBand) for a target Jaccard threshold. Banded LSH
     * makes a pair with similarity s a candidate with probability
@@ -250,10 +257,11 @@ object Dedup {
 
   /** Near-duplicate pairs via MinHash + banded LSH + exact verification.
     *
-    * Plan shape: Project(shingles, signature, band keys) -> explode bands ->
-    * shuffle by (band, key) -> self-join inside buckets only -> exact
-    * jaccard filter -> distinct pairs. `maxBucket` caps pathological buckets
-    * (boilerplate documents) so no task goes quadratic.
+    * Plan shape: Project(signature, native band keys) -> explode bands ->
+    * shuffle by (band, key) -> self-join inside buckets only -> distinct
+    * pairs -> shingle sets of the candidate documents -> merge-walk
+    * jaccard filter. `maxBucket` caps pathological buckets (boilerplate
+    * documents) so no task goes quadratic.
     *
     * @return (idA, idB, jaccard) with idA < idB, jaccard >= threshold.
     */
@@ -296,15 +304,27 @@ object Dedup {
     // filters to candidate rows, and only those pay the kernel. One
     // checkpointed candidate-sized shingle frame feeds the two attach
     // joins, which shuffle candidate-sized arrays, never corpus-sized.
+    // The corpus is spread below the semi-join, not above it: asking the
+    // join for its partition count would run the id distinct and the join
+    // once more before the checkpoint runs them.
+    // Keeping `sh` from the signature pass instead would skip this second
+    // sketch, but it stores and shuffles the shingle sets of EVERY
+    // document: hundreds to thousands of longs per web document against
+    // `bands` keys, for a saving that only exists when nearly every
+    // document is a candidate.
     val ids = candidates.select(col("id_a").as(idCol))
       .unionByName(candidates.select(col("id_b").as(idCol))).distinct()
     val sets = shingleSets(
-      df.join(ids, Seq(idCol), "left_semi"), idCol, textCol, shingleWidth)
+      Similarity.parallelize(df).join(ids, Seq(idCol), "left_semi"), idCol, textCol,
+      shingleWidth, spread = false)
       .localCheckpoint(false, CandLevel)
+    // Both `sh` arrays are sorted and distinct (the sketch's contract), so
+    // the jaccard is one merge walk instead of two hash-set builds.
     candidates
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .select(col("id_a"), col("id_b"),
+        graft.functions.ShingleSketch.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
   }
 
@@ -508,7 +528,8 @@ object Dedup {
         .select(col("id").as("batch_id"), col("sh").as("sh_a")), Seq("batch_id"))
       .join(shingleSets(corpus, idCol, textCol, shingleWidth)
         .select(col("id").as("corpus_id"), col("sh").as("sh_b")), Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .select(col("batch_id"), col("corpus_id"),
+        graft.functions.ShingleSketch.sortedJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
   }
 

@@ -154,7 +154,8 @@ object TextAnalysis {
   /** Scalar quality score in [0,1]: documents score high when they look
     * like prose (many tokens, mostly alphabetic, some stopwords, low
     * repetition, moderate punctuation). Thresholds follow common web-corpus
-    * filtering heuristics (Gopher/C4-style rules, public knowledge). */
+    * filtering heuristics (Gopher/C4-style rules, public knowledge).
+    * [[qualityKeep]] applies the same score inside one filter node. */
   def qualityScore(text: Column): Column = {
     val f = qualityFeatures(text)
     val checks = Seq[Column](
@@ -167,6 +168,14 @@ object TextAnalysis {
       (f("repetition") <= 0.5).cast("double"))
     checks.reduce(_ + _) / checks.length
   }
+
+  /** Keep rule of the curation quality filter: `qualityScore >= minQuality`
+    * and `tokenCount >= minTokens`, as one expression that evaluates the
+    * quality kernel once per row. Spelled with the two Columns, a filter
+    * runs the kernel once per feature it reads: `FilterExec` does no
+    * common-subexpression elimination. */
+  def qualityKeep(text: Column, minQuality: Double, minTokens: Int): Column =
+    graft.functions.TextStatsKernel.qualityKeep(text, minQuality, minTokens)
 
   // ------------------------------------------------- repetition (Gopher-style)
 

@@ -41,8 +41,7 @@ object DriveNdProbe {
         .withColumn(textCol, graft.functions.HtmlKernel.htmlToText(col(textCol)))
         .where(trim(col(textCol)) =!= "")
         .where(TextAnalysis.languageId(col(textCol)).isin("en"))
-        .where(TextAnalysis.qualityScore(col(textCol)) >= 0.7 &&
-          TextAnalysis.tokenCount(col(textCol)) >= 5)
+        .where(TextAnalysis.qualityKeep(col(textCol), 0.7, 5))
         .withColumn(textCol, TextAnalysis.removeRepeatedLines(col(textCol)))
         .where(trim(col(textCol)) =!= "")
       cur = Dedup.exactKeepFirst(

@@ -99,7 +99,8 @@ object DrivePipelineScale {
         val u = (pmod(xxhash64(idc, lit(31L)), lit(1000000L)).cast("double") + 0.5) /
           1000000.0
         val rank = floor(pow(lit(1000.0), u)).cast("long")
-        val fam = (idc.cast("long") / 2000L) * 1009L + rank
+        // `/` is fractional division: floor it, or every doc is its own block.
+        val fam = floor(idc.cast("long") / 2000L) * 1009L + rank
         concat(lit("s"), translate(fam.cast("string"), "0123456789",
           "abcdefghij"), lit(tag))
       }

@@ -123,4 +123,106 @@ class ShingleSketchSpec extends AnyFunSuite {
     assert(r(0).getStruct(1).getSeq[Long](1).isEmpty, "numHashes=0 -> empty sig")
     assert(r(1).isNullAt(1))
   }
+
+  // ----------------------------------------------- LSH band keys, jaccard
+
+  /** The lambda spelling the native band keys replace. */
+  private def lambdaBandKeys(sig: org.apache.spark.sql.Column, bands: Int,
+      rowsPerBand: Int): org.apache.spark.sql.Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(b, array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), ",")))
+
+  /** (native, lambda) band keys per id, under whole-stage codegen and
+    * interpreted. */
+  private def bandKeysBothWays(df: org.apache.spark.sql.DataFrame, bands: Int,
+      rowsPerBand: Int): Seq[(Map[Long, Option[List[Long]]], Map[Long, Option[List[Long]]])] = {
+    def run(): (Map[Long, Option[List[Long]]], Map[Long, Option[List[Long]]]) = {
+      val rows = df.select(col("id"),
+          ShingleSketch.bandKeys(col("sig"), bands, rowsPerBand).as("native"),
+          lambdaBandKeys(col("sig"), bands, rowsPerBand).as("lambda"))
+        .collect()
+      def keys(i: Int) = rows.map(r => r.getLong(0) ->
+        Option(r.getSeq[Long](i)).map(_.toList)).toMap
+      (keys(1), keys(2))
+    }
+    val codegen = run()
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    val interpreted = try run() finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    Seq(codegen, interpreted)
+  }
+
+  test("native band keys equal the lambda spelling bit for bit: random and edge signatures") {
+    val rnd = new scala.util.Random(7)
+    val random = (0 until 300).map(i => Seq.fill(128)(rnd.nextLong()))
+    val edges = Seq(
+      Seq.fill(128)(Long.MinValue),
+      Seq.fill(128)(Long.MaxValue),
+      Seq.fill(128)(-1L),
+      Seq.fill(128)(0L),
+      (0 until 128).map(k => if (k % 3 == 0) Long.MinValue else -k.toLong * 1000003L),
+      (0 until 128).map(k => if (k % 2 == 0) Long.MaxValue else Long.MinValue + k),
+      Seq(1L, -2L, Long.MinValue), // shorter than the banding: empty tail bands
+      Seq.empty[Long])
+    val df = (random ++ edges).zipWithIndex.map { case (sig, i) => (i.toLong, sig) }
+      .toDF("id", "sig")
+    for ((bands, r) <- Seq((16, 8), (32, 4), (128, 1), (1, 128), (5, 3))) {
+      bandKeysBothWays(df, bands, r).foreach { case (native, lambda) =>
+        assert(native.keySet == lambda.keySet)
+        native.keySet.foreach { id =>
+          assert(native(id) == lambda(id), s"band keys differ: id $id, $bands x $r")
+        }
+      }
+    }
+  }
+
+  test("native band keys: null signatures and null elements follow the lambda spelling") {
+    val df = Seq(
+      (1L, Option(Seq(Option(5L), None, Option(-7L), None))),
+      (2L, Option(Seq(Option.empty[Long], None, None, None))),
+      (3L, Option(Seq(None, Option(Long.MinValue), Option(3L), None))),
+      (4L, Option.empty[Seq[Option[Long]]]))
+      .toDF("id", "sig")
+    for ((bands, r) <- Seq((2, 2), (4, 1), (1, 4), (3, 2))) {
+      bandKeysBothWays(df, bands, r).foreach { case (native, lambda) =>
+        assert(native == lambda, s"$bands x $r")
+        assert(native(4L).exists(_.size == bands), "a null signature still has keys")
+      }
+    }
+  }
+
+  test("sorted-merge jaccard equals Dedup.jaccard on sorted distinct arrays, empty included") {
+    val rnd = new scala.util.Random(11)
+    def set(universe: Int): Seq[Long] =
+      Seq.fill(rnd.nextInt(40))(rnd.nextInt(universe).toLong - universe / 2)
+        .distinct.sorted
+    val extremes = Seq(Long.MinValue, -1L, 0L, 1L, Long.MaxValue)
+    val random = (0 until 400).map(_ => (set(60), set(60)))
+    val fixed = Seq(
+      (Seq.empty[Long], Seq.empty[Long]),
+      (Seq.empty[Long], Seq(1L, 2L)),
+      (Seq(3L), Seq.empty[Long]),
+      (Seq(1L, 2L, 3L), Seq(1L, 2L, 3L)),
+      (Seq(1L, 2L), Seq(3L, 4L)),
+      (extremes, extremes.drop(2)),
+      (extremes, Seq(Long.MinValue, Long.MaxValue)))
+    val df = (random ++ fixed).zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
+      .toDF("id", "a", "b")
+    def run(): Array[(Long, Double, Double)] = df.select(col("id"),
+        ShingleSketch.sortedJaccard(col("a"), col("b")),
+        Dedup.jaccard(col("a"), col("b")))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val codegen = run()
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    val interpreted = try run() finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    for ((id, merged, sets) <- codegen ++ interpreted)
+      assert(java.lang.Double.doubleToRawLongBits(merged) ==
+        java.lang.Double.doubleToRawLongBits(sets), s"row $id: $merged vs $sets")
+    val byId = codegen.map(x => x._1 -> x._2).toMap
+    assert(byId(random.size.toLong) == 1.0, "two empty sets score 1.0")
+    assert(byId(random.size + 1L) == 0.0)
+    assert(byId(random.size + 3L) == 1.0)
+    val nulls = Seq((1L, Option(Seq(1L)), Option.empty[Seq[Long]])).toDF("id", "a", "b")
+      .select(ShingleSketch.sortedJaccard(col("a"), col("b"))).collect()
+    assert(nulls.head.isNullAt(0), "a null side gives null")
+  }
 }
