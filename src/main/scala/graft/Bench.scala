@@ -134,8 +134,7 @@ object Bench {
         DataGenPlan(Seq(iotSpec(100000L, cpus.toInt * 3)), 42L))("iot"))
       catch { case NonFatal(_) => () }
       try {
-        val star = graft.io.PlanJson.loadFile(
-          "/root/reference/tests/core/fixtures/star_schema.json")
+        val star = graft.io.PlanJson.loadResource("star_schema.json")
         val scaled = star.copy(tables = star.tables.map(t =>
           t.copy(rows = t.rows * 2, partitions = Some(cpus.toInt * 2))))
         graft.engine.Generator.generate(spark, scaled).values.foreach(materialize)
@@ -388,8 +387,7 @@ object Bench {
     }
     // Star-schema multi-table generation incl. FK reconstruction, scaled up.
     timeMin3("bench_gen_star_1m") {
-      val star = graft.io.PlanJson.loadFile(
-        "/root/reference/tests/core/fixtures/star_schema.json")
+      val star = graft.io.PlanJson.loadResource("star_schema.json")
       val scaled = star.copy(tables = star.tables.map(t =>
         t.copy(rows = t.rows * 200, partitions = Some(nCpus * 2))))
       graft.engine.Generator.generate(spark, scaled).values.foreach(materialize)

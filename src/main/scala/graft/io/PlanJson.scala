@@ -12,8 +12,11 @@ import graft.spec._
   * The wire shape is compatible with the reference's fixture format
   * (tests/core/fixtures/star_schema.json, plan.yml): tables with
   * `gen`-discriminated column strategies, `foreign_key` sub-objects with a
-  * `table.column` ref, and `distribution` objects (`type`-discriminated,
-  * weighted values keyed by value). Our superset strategies (template,
+  * `table.column` ref, `distribution` objects (`type`-discriminated,
+  * weighted values keyed by value) and `primary_key.columns`. Plans in
+  * this shape ship under `src/main/resources/graft/fixtures/`
+  * (`star_schema.json`, `plan.json`, `plan.yml`; see FIXTURES.md §1-2)
+  * and load with [[loadResource]]. Our superset strategies (template,
   * faker, iltext, struct, array, constant, expression) serialize under the
   * same `gen.strategy` discriminator, so save→load→save is the identity on
   * every plan this engine can express.
@@ -29,10 +32,26 @@ object PlanJson {
   def loadJson(text: String): DataGenPlan = fromTree(json.readTree(text))
   def loadYaml(text: String): DataGenPlan = fromTree(yaml.readTree(text))
 
-  def loadFile(path: String): DataGenPlan = {
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
-    if (path.endsWith(".yml") || path.endsWith(".yaml")) loadYaml(text) else loadJson(text)
+  def loadFile(path: String): DataGenPlan =
+    load(path, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
+
+  /** Loads one of the plan fixtures shipped on the classpath under
+    * `graft/fixtures/` (`star_schema.json`, `plan.json`, `plan.yml`).
+    * A build that copies no resources gets a [[SpecError]] naming the
+    * missing resource. */
+  def loadResource(name: String): DataGenPlan = {
+    val resource = s"graft/fixtures/$name"
+    val in = Option(getClass.getClassLoader.getResourceAsStream(resource))
+      .getOrElse(throw SpecError(s"plan fixture resource '$resource' is not on the classpath"))
+    try load(name, in.readAllBytes()) finally in.close()
   }
+
+  private def load(name: String, bytes: Array[Byte]): DataGenPlan = {
+    val text = new String(bytes, "UTF-8")
+    if (isYaml(name)) loadYaml(text) else loadJson(text)
+  }
+
+  private def isYaml(name: String): Boolean = name.endsWith(".yml") || name.endsWith(".yaml")
 
   private def fromTree(root: JsonNode): DataGenPlan = {
     val seed = if (root.has("seed")) root.get("seed").asLong else 42L
@@ -204,7 +223,7 @@ object PlanJson {
 
   def saveFile(plan: DataGenPlan, path: String): Unit =
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      (if (path.endsWith(".yml") || path.endsWith(".yaml")) saveYaml(plan) else saveJson(plan))
+      (if (isYaml(path)) saveYaml(plan) else saveJson(plan))
         .getBytes("UTF-8"))
 
   private def toTree(plan: DataGenPlan): ObjectNode = {

@@ -1313,7 +1313,7 @@ object Dedup {
     * crawl. Distinct-DOC counting on purpose: a line repeated inside one
     * page is [[graft.llm.TextAnalysis.removeRepeatedLines]]'s (within-doc)
     * job, not corpus boilerplate. Reference behavior:
-    * /root/reference — no counterpart (data-generation only); the rule
+    * dbldatagen has no counterpart (data-generation only); the rule
     * follows the C4 paper's cross-document span dedup (Raffel et al. 2020)
     * as commonly applied line-wise (RefinedWeb, Dolma).
     *

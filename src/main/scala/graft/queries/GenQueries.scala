@@ -198,7 +198,7 @@ object GenQueries {
 
     // ------------------------------------------------- serialization + ddl
     "q_gen_serialization" -> ((s, _) => {
-      val star = PlanJson.loadFile("/root/reference/tests/core/fixtures/star_schema.json")
+      val star = PlanJson.loadResource("star_schema.json")
       val roundtrip = PlanJson.loadJson(PlanJson.saveJson(star)) == star &&
         PlanJson.loadYaml(PlanJson.saveYaml(star)) == star
       val tables = Generator.generate(s, star)

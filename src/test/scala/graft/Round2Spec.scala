@@ -20,13 +20,42 @@ class Round2Spec extends AnyFunSuite {
   // ------------------------------------------------------- serialization
 
   test("plan JSON/YAML roundtrip is the identity on reference fixtures") {
-    for (path <- Seq("/root/reference/tests/core/fixtures/star_schema.json",
-                     "/root/reference/tests/core/fixtures/plan.json",
-                     "/root/reference/tests/core/fixtures/plan.yml")) {
-      val plan = PlanJson.loadFile(path)
+    val fixtures = Seq("star_schema.json", "plan.json", "plan.yml")
+    // The repo's fixtures, plus the reference's own files wherever a
+    // dbldatagen checkout sits beside this repo as `reference`.
+    val refDir = java.nio.file.Paths.get("..", "reference", "tests", "core", "fixtures")
+    val refPaths =
+      if (java.nio.file.Files.isDirectory(refDir)) fixtures.map(f => refDir.resolve(f).toString)
+      else Nil
+    val plans = fixtures.map(f => s"graft/fixtures/$f" -> PlanJson.loadResource(f)) ++
+      refPaths.map(p => p -> PlanJson.loadFile(p))
+    for ((path, plan) <- plans) {
       assert(PlanJson.loadJson(PlanJson.saveJson(plan)) === plan, s"json roundtrip: $path")
       assert(PlanJson.loadYaml(PlanJson.saveYaml(plan)) === plan, s"yaml roundtrip: $path")
     }
+  }
+
+  test("plan fixtures: plan.yml is plan.json; a missing one is a named SpecError") {
+    val plan = PlanJson.loadResource("plan.json")
+    assert(PlanJson.loadResource("plan.yml") === plan)
+    assert(plan.tables.map(t => (t.name, t.rows, t.primaryKey)) === Seq(
+      ("customers", 200L, Some(PrimaryKey("customer_id"))),
+      ("orders", 1000L, Some(PrimaryKey("order_id")))))
+    val ex = intercept[SpecError](PlanJson.loadResource("no_such_plan.json"))
+    assert(ex.getMessage.contains("graft/fixtures/no_such_plan.json"))
+  }
+
+  test("star_schema fixture generates its declared rows with zero FK orphans") {
+    val star = PlanJson.loadResource("star_schema.json")
+    val tables = graft.engine.Generator.generate(spark, star)
+    assert(star.tables.map(t => t.name -> tables(t.name).count()) === Seq(
+      "regions" -> 10L, "customers" -> 500L, "products" -> 100L,
+      "orders" -> 5000L, "order_items" -> 2000L))
+    for ((child, parent, key) <- Seq(("customers", "regions", "region_id"),
+        ("orders", "customers", "customer_id"), ("orders", "products", "product_id"),
+        ("order_items", "orders", "order_id"), ("order_items", "products", "product_id")))
+      assert(tables(child).join(tables(parent), Seq(key), "left_anti").count() === 0,
+        s"$child.$key orphans")
   }
 
   test("roundtrip preserves FK null_fraction and seed_from_columns") {
