@@ -3,8 +3,9 @@ package graft.io
 import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FSDataOutputStream, LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** `file://` filesystem without per-file permission syscalls or CRC
   * sidecars — the library's recommended `fs.file.impl` for local/scratch
@@ -85,7 +86,34 @@ class BareRawLocalFs extends RawLocalFileSystem {
   * metadata + state snapshots forked 2.7-4.7 s of per-file `chmod` inside
   * a ~3 s streaming query. Mirrors Hadoop's own `RawLocalFs`
   * (DelegateToFileSystem over the raw local FS) with permission
-  * application disabled; rename atomicity on the local FS is unchanged. */
+  * application disabled; rename atomicity on the local FS is unchanged.
+  *
+  * A file last written by the checksummed `LocalFs` (the hatch was off
+  * then) has a `.crc` sidecar that no longer matches once this class
+  * writes or renames over it, and every later checksummed read would fail
+  * on it. Creating or renaming onto a path therefore drops that sidecar,
+  * as Hadoop's checksummed file systems do for their own files. */
 class BareLocalAbstractFs(uri: java.net.URI, conf: Configuration)
   extends org.apache.hadoop.fs.DelegateToFileSystem(
-    uri, new BareRawLocalFs, conf, "file", false)
+    uri, new BareRawLocalFs, conf, "file", false) {
+
+  private def dropStaleCrc(f: Path): Unit = {
+    fsImpl.delete(new Path(f.getParent, s".${f.getName}.crc"), false)
+    ()
+  }
+
+  override def createInternal(f: Path, flag: java.util.EnumSet[CreateFlag],
+      permission: FsPermission, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable, checksumOpt: Options.ChecksumOpt,
+      createParent: Boolean): FSDataOutputStream = {
+    val out = super.createInternal(f, flag, permission, bufferSize, replication,
+      blockSize, progress, checksumOpt, createParent)
+    dropStaleCrc(f)
+    out
+  }
+
+  override def renameInternal(src: Path, dst: Path): Unit = {
+    super.renameInternal(src, dst)
+    dropStaleCrc(dst)
+  }
+}

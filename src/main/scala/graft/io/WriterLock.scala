@@ -35,7 +35,7 @@ import org.apache.spark.sql.SparkSession
   * carries the owner's token, so a writer whose lock was (wrongly or
   * rightly) broken and re-acquired by someone else can no longer free
   * the new owner's lock from its `finally`. */
-object WriterLock {
+object WriterLock extends org.apache.spark.internal.Logging {
 
   /** Named failure for a second live writer — catch-and-retry-able. */
   final class ConcurrentWriterException(msg: String)
@@ -145,7 +145,7 @@ object WriterLock {
                   catch { case _: java.io.IOException => false }
                 if (newOwner) {
                   try fs.delete(aside, false) catch { case _: java.io.IOException => () }
-                  System.err.println(s"[writer-lock] $op: could not restore a " +
+                  logWarning(s"$op: could not restore a " +
                     s"live lock after a false-stale rename of $lock (a new writer " +
                     "acquired in the window) — the displaced holder's lock file is " +
                     "gone; its release is a no-op and the horizon governs from here")
@@ -154,7 +154,7 @@ object WriterLock {
                   // aside in place as the only surviving record of the live
                   // writer — a leaked sidecar is recoverable by an operator;
                   // deleting it is not.
-                  System.err.println(s"[writer-lock] $op: could not restore a " +
+                  logWarning(s"$op: could not restore a " +
                     s"live lock after a false-stale rename of $lock (transient " +
                     s"rename failures, no new owner) — leaving the aside " +
                     s"sidecar ${aside.getName} in place; remove it manually " +
@@ -201,7 +201,7 @@ object WriterLock {
               // operators on such stores should raise staleAfterMs past
               // their longest writer instead.
               supported = false
-              System.err.println(s"[writer-lock] $op: filesystem does not " +
+              logWarning(s"$op: filesystem does not " +
                 s"support setTimes — heartbeat disabled; the $staleAfterMs ms " +
                 "stale horizon now measures time since ACQUISITION")
             case _: java.io.IOException =>
@@ -222,7 +222,7 @@ object WriterLock {
               wrappedFails += 1
               if (wrappedFails >= 3) {
                 supported = false
-                System.err.println(s"[writer-lock] $op: heartbeat refresh " +
+                logWarning(s"$op: heartbeat refresh " +
                   s"failed with ${e.getClass.getName}: ${e.getMessage} on " +
                   s"$wrappedFails consecutive beats — heartbeat disabled; " +
                   s"the $staleAfterMs ms stale horizon now measures time " +

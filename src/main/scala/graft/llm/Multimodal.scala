@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * (`sampleFrames`) remains a byte-slice plan shape — ffmpeg-class demuxers
   * are out of scope for a JVM-only library.
   */
-object Multimodal {
+object Multimodal extends org.apache.spark.internal.Logging {
 
   /** Metadata schema carried alongside every media binary. */
   val MediaMetaType: StructType = StructType(Seq(
@@ -1787,7 +1787,7 @@ object Multimodal {
       // corpus-wide recall pass `flatIndex = true` (one cell, every
       // probe corpus-wide — the r15 flat-index cost profile).
       if (!flatIndex)
-        System.err.println(s"[video-profile] cell-partitioned index path " +
+        logWarning(s"cell-partitioned index path " +
           s"engaged at n=$n (> 16·maxBucket=${16L * maxBucket}): recall is " +
           "the 3x3 duration/fps cell neighborhood (re-encode invariance " +
           "class); pass flatIndex=true for corpus-wide recall")

@@ -70,22 +70,13 @@ object WordPiece {
       .stripMargin)
 
   /** The initial distinct-word symbol table (the one corpus-wide
-    * shuffle), pre-checkpoint — shared by [[train]] and the plan audit. */
+    * shuffle), pre-checkpoint. */
   private[graft] def wordSymbolTable(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(wordsOf(col(textCol))).as("w"))
       .where(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(initSyms.as("syms"), col("cnt"))
 
-  /** One sweep's scored, ranked candidate frame over the symbol table —
-    * `(l, r, c, score)` ordered (score desc, l asc, r asc). Shared by
-    * [[train]] and the plan audit so PLANS.md certifies the SHIPPING
-    * pipeline, never a copy. Symbol counts are tiny (≤ alphabet +
-    * accepted merges) and broadcast-join into the pair table for the
-    * score denominators; counts are cast to double BEFORE the
-    * denominator multiply — two long symbol counts at web-corpus
-    * frequencies (~5e9 each) would overflow Long and raise under ANSI
-    * mode. */
   /** The per-sweep symbol-count table (`sym`, `sc`) — tiny (≤ alphabet +
     * accepted merges). Exposed so [[train]] can materialize it ONCE per
     * sweep: the two broadcast denominators below are canonically different
@@ -95,10 +86,17 @@ object WordPiece {
     words.select(explode(col("syms")).as("sym"), col("cnt"))
       .groupBy("sym").agg(sum("cnt").as("sc"))
 
+  /** One sweep's scored, ranked candidate frame over the symbol table —
+    * `(l, r, c, score)` ordered (score desc, l asc, r asc). Symbol counts
+    * (`symCounts`, from [[symCountFrame]]) are tiny (≤ alphabet +
+    * accepted merges) and broadcast-join into the pair table for the
+    * score denominators; counts are cast to double BEFORE the
+    * denominator multiply — two long symbol counts at web-corpus
+    * frequencies (~5e9 each) would overflow Long and raise under ANSI
+    * mode. */
   private[graft] def sweepCandidateFrame(words: DataFrame,
-      minPairCount: Long, symCountsIn: Option[DataFrame] = None): DataFrame = {
+      minPairCount: Long, symCounts: DataFrame): DataFrame = {
     val n = size(col("syms"))
-    val symCounts = symCountsIn.getOrElse(symCountFrame(words))
     words.where(n >= 2)
       .select(col("cnt"), explode(zip_with(
         slice(col("syms"), lit(1), n - 1), slice(col("syms"), lit(2), n - 1),
@@ -158,7 +156,7 @@ object WordPiece {
       // re-running the aggregate (r18 — one vocab scan per sweep fewer).
       val sc = symCountFrame(words).localCheckpoint(true)
       val top =
-        try sweepCandidateFrame(words, minPairCount, Some(sc))
+        try sweepCandidateFrame(words, minPairCount, sc)
           .limit(fetch).collect()
         finally org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(sc)
           .foreach(_.unpersist(blocking = false))

@@ -150,7 +150,7 @@ object GenQueries {
       try {
         val joined = s.table("graft_bfact").join(s.table("graft_bdim"), "key")
         val rows = joined.collect()
-        val noShuffle = !joined.queryExecution.executedPlan.toString.contains("Exchange")
+        val noShuffle = graft.PlanShape(joined).exchanges.isEmpty
         one(s.range(1).toDF("one"),
           "n" -> lit(rows.length.toLong),
           "dim_keys_covered" -> lit(rows.map(_.getAs[Int]("key")).distinct.length == 100L),

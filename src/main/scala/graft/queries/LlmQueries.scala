@@ -1985,7 +1985,7 @@ object LlmQueries {
     // exact re-rank of top-8k) vs the exact top-10 — both arms
     // Spark-computed, overlap deterministic. n_exact is the SQL-replayable
     // fact; the recall pin (>= 0.7 at the m=16/ksub=64/rerank=8 operating
-    // point, measured 0.94 at sf0.1 — sweep in PqSpec/PLANS.md) is the
+    // point, measured 0.94 at sf0.1 — sweep in PqSpec) is the
     // hash-frozen guarantee.
     "q_ann_pq_recall" -> ((s, d) => {
       // Phase markers (StageLog -> bench_out "stages"): the harness trains
@@ -2075,12 +2075,9 @@ object LlmQueries {
         probe.unionByName(direct)
           .groupBy("query_id", "neighbor_id").agg(count(lit(1)).as("c"))
           .where(col("c") =!= 2).count())
-      val plan = probe.queryExecution.executedPlan.toString
-      // ANY scan with non-empty PartitionFilters (the probe plan also
-      // scans the unpartitioned raw/query frames, whose filter lists are
-      // empty).
-      val prunedScan = "PartitionFilters: \\[([^\\]]*)\\]".r
-        .findAllMatchIn(plan).exists(_.group(1).trim.nonEmpty)
+      // ANY scan with a planning-time partition filter (the probe plan
+      // also scans the unpartitioned raw/query frames, which have none).
+      val prunedScan = graft.PlanShape(probe).staticPartitionFilters.nonEmpty
       one(emb.limit(1),
         "n_queries" -> L(5L),
         "rows_ok" -> lit(nProbeRows == 50L),
@@ -2479,23 +2476,20 @@ object LlmQueries {
           "q_id", "embedding", k = 10, nProbe = 8, rerank = 200)
         .select(col("query_id").as("q_id"), col("neighbor_id").as("doc_id"),
           col("rank"))
-      def pruned(f: DataFrame): Boolean =
-        "PartitionFilters: \\[([^\\]]*)IN \\(([^\\]]*)\\]".r
-          .findAllMatchIn(f.queryExecution.executedPlan.toString)
-          .exists(_.group(2).trim.nonEmpty)
       // The fused ranking deliberately probes EVERY cell (that is what
       // makes the dense side exactly brute force and DuckDB-replayable),
       // and probeIvfPqIndex correctly skips the cell filter then — so the
       // ann pruning fact is pinned on a SIDE probe at nProbe=2, whose
       // static `centroid_idx IN (...)` list must reach the scan as a
-      // PartitionFilter (the regex demands the literal IN list: dynamic-
-      // pruning subquery text alone must not satisfy the pin).
+      // PartitionFilter (a dynamic-pruning subquery alone must not satisfy
+      // the pin).
       val annSide = Similarity.probeIvfPqIndex(reloaded, meta2, raw, queries,
         "q_id", "embedding", k = 10, nProbe = 2, rerank = 200)
       val res = graft.llm.Retrieval.rrfFuse(Seq(bm, ann), k = 10)
         .select(col("q_id"), col("doc_id"), col("rank"),
           floor(col("rrf_score") * 1e9).cast("long").as("score_fp"),
-          lit(pruned(bm)).as("bm25_pruned"), lit(pruned(annSide)).as("ann_pruned"))
+          lit(graft.PlanShape(bm).prunedByLiteralIn).as("bm25_pruned"),
+          lit(graft.PlanShape(annSide).prunedByLiteralIn).as("ann_pruned"))
         .orderBy("q_id", "rank").localCheckpoint(true)
       org.apache.commons.io.FileUtils.deleteQuietly(bmDir.toFile)
       org.apache.commons.io.FileUtils.deleteQuietly(annDir.toFile)

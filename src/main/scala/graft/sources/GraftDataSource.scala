@@ -31,7 +31,7 @@ import graft.spec.DataGenPlan
   *
   * Read path: the provider compiles the plan with the ordinary engine
   * ([[graft.engine.Generator]]) and then EXTRACTS the compiled pipeline —
-  * generation plans are always `Range -> Project/Filter*` (PLANS.md:
+  * generation plans are always `Range -> Project/Filter*` (PlanShapeSpec:
   * zero-Exchange, zero-join, FK reconstruction included) — into bound
   * Catalyst expression layers that each partition reader evaluates over its
   * own id slice. No shuffle, no driver materialization; parallelism is the

@@ -75,7 +75,7 @@ object DriveCoreScale {
     val docsPath = s"$tmp/docs"
     val vecsPath = s"$tmp/vecs"
     val rowsPath = s"$tmp/rows"
-    if (!new java.io.File(s"$docsPath/_SUCCESS").exists) {
+    if (!Seq(docsPath, vecsPath, rowsPath).forall(p => new java.io.File(s"$p/_SUCCESS").exists)) {
       spark.range(nDocs).select(col("id").as("doc_id"),
         when(pmod(col("id"), lit(10)) === 9,
           array_join(slice(tokens(col("id") - 1, 80, 0), 11, 60), " "))

@@ -26,7 +26,8 @@ object DriveProfileQ {
       case a if a.startsWith("--suffix=") => a.stripPrefix("--suffix=")
     }.getOrElse("")
     // --conf k=v (repeatable): extra session config for A/B runs (e.g. the
-    // streaming state-store provider); overrides the tuning defaults.
+    // streaming state-store provider); applied last, so it overrides the
+    // tuning defaults and the fixed session configs.
     val extraConf = args.collect {
       case a if a.startsWith("--conf ") || a.startsWith("--conf=") =>
         a.stripPrefix("--conf=").stripPrefix("--conf ").split("=", 2) match {
@@ -48,10 +49,10 @@ object DriveProfileQ {
       .config("spark.sql.maxPlanStringLength",
         sys.props.getOrElse("graft.planLen", "8192"))
       .config("spark.sql.shuffle.partitions", cpus)
-    val spark = extraConf.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+    val spark = extraConf.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
       .appName("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -259,8 +259,7 @@ object TimeOps {
     * `session_start`, `session_end`, `n_events` plus any caller aggregates.
     * The groupBy keys (keys, session_seq) are a superset of the window's
     * hash partitioning, so Catalyst inserts NO second exchange — the whole
-    * sessionize-and-aggregate pipeline is one shuffle end-to-end (asserted
-    * in PLANS.md).
+    * sessionize-and-aggregate pipeline is one shuffle end-to-end.
     */
   def sessions(events: DataFrame, on: Seq[String], timeCol: String,
       gap: Column, extraAggs: Seq[Column] = Nil): DataFrame = {

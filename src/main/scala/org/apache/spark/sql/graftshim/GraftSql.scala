@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `Expression` into a public `Column` (and back) has no public API in
   * Spark 4's classic frontend — `ExpressionUtils.column` is the blessed
   * internal route (the built-in `functions` object uses the same path).
-  * Nothing else internal leaks through here.
+  * The other members below each name the internal they read.
   */
 object GraftSql {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -33,4 +33,12 @@ object GraftSql {
   def observedRow(obs: org.apache.spark.sql.Observation)
       : Option[org.apache.spark.sql.Row] =
     obs.getRowOrEmpty
+
+  /** The source filters a file scan pushes down (its `PushedFilters`):
+    * `pushedDownFilters` is protected, and `translateFilter` over the
+    * scan's data filters is how it computes them. */
+  def pushedFilters(scan: org.apache.spark.sql.execution.FileSourceScanExec)
+      : Seq[org.apache.spark.sql.sources.Filter] =
+    scan.dataFilters.flatMap(org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(_, supportNestedPredicatePushdown = true))
 }

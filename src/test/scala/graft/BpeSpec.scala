@@ -59,9 +59,9 @@ class BpeSpec extends AnyFunSuite {
       .withColumn("stripped", concat_ws("", split(lower(trim(col("text"))), "\\s+")))
 
     // Encoding is a narrow fused-kernel projection (parquet scan -> project).
-    val plan = enc.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"BPE encode must stay narrow:\n$plan")
-    assert(plan.contains("graft_bpe_encode"))
+    assert(PlanShape(enc).exchanges.isEmpty,
+      s"BPE encode must stay narrow:\n${enc.queryExecution.executedPlan}")
+    assert(PlanShape(enc).hasKernel("graft_bpe_encode"))
 
     val agg = enc.agg(
       sum(when(concat_ws("", col("bpe_tokens")) === col("stripped"), 0L)

@@ -42,9 +42,9 @@ class PqSpec extends AnyFunSuite {
       .select(PqKernels.decode(col("c"), book)).head.isNullAt(0))
 
     // Narrow: encoding never shuffles.
-    val plan = df.select(PqKernels.encode(col("v"), book))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"PQ encode must stay narrow:\n$plan")
+    val encoded = df.select(PqKernels.encode(col("v"), book))
+    assert(PlanShape(encoded).exchanges.isEmpty,
+      s"PQ encode must stay narrow:\n${encoded.queryExecution.executedPlan}")
   }
 
   test("pqTrain: shape, in-range codes, Lloyd refinement reduces reconstruction error") {
@@ -105,17 +105,18 @@ class PqSpec extends AnyFunSuite {
     // The scoring side of pqTopK carries the fused ADC kernel and NO
     // full-dim decode — the decode path must not be in the hot loop.
     val queries = emb.where(col("vec_id") < 2)
-    val plan = Similarity.pqTopK(emb, "vec_id", "embedding",
+    val top = Similarity.pqTopK(emb, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 5, m = 16, ksub = 64,
-      refineIterations = 0, rerank = 2).queryExecution.executedPlan.toString
-    assert(plan.contains("graft_pq_adc"), "pqTopK must score via the ADC LUT kernel")
-    assert(!plan.contains("graft_pq_decode"),
-      s"pqTopK scoring must not decode candidates to full dim:\n$plan")
-    val hybridPlan = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+      refineIterations = 0, rerank = 2)
+    val topShape = PlanShape(top)
+    assert(topShape.hasKernel("graft_pq_adc"), "pqTopK must score via the ADC LUT kernel")
+    assert(!topShape.hasKernel("graft_pq_decode"),
+      s"pqTopK scoring must not decode candidates to full dim:\n${topShape.plan}")
+    val hybrid = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 5, nCentroids = 8, nProbe = 2,
       m = 16, ksub = 64, refineIterations = 0, rerank = 2)
-      .queryExecution.executedPlan.toString
-    assert(hybridPlan.contains("graft_pq_adc") && !hybridPlan.contains("graft_pq_decode"))
+    val hybridShape = PlanShape(hybrid)
+    assert(hybridShape.hasKernel("graft_pq_adc") && !hybridShape.hasKernel("graft_pq_decode"))
   }
 
   test("pqTopK: recall against exact top-k on the clustered corpus") {
@@ -125,7 +126,7 @@ class PqSpec extends AnyFunSuite {
       queries, "vec_id", "embedding", k = 10)
       .select(col("query_id"), col("neighbor_id"))
     val nExact = exact.count()
-    // Operating-point sweep (documented in PLANS.md): finer subspaces beat
+    // Operating-point sweep (table in IMPLEMENTATION.md): finer subspaces beat
     // more refinement; m=16 ksub=32 rerank=4 lands 0.90 on this corpus.
     for ((m, ksub, refine, rr) <- Seq((8, 16, 2, 4), (16, 16, 2, 4),
         (16, 32, 2, 4), (8, 16, 2, 8))) {

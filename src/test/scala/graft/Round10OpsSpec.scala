@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,8 +52,8 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(rows.count(r => r.getLong(0) == 5L || r.getLong(0) == 6L) === 0)
 
     // Narrow operator: no Exchange anywhere in the executed plan.
-    val plan = c.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"chunking must not shuffle:\n$plan")
+    assert(PlanShape(c).exchanges.isEmpty,
+      s"chunking must not shuffle:\n${c.queryExecution.executedPlan}")
 
     intercept[IllegalArgumentException] {
       Chunking.chunkByTokens(docs, "doc_id", "text", 8, 8)
@@ -84,8 +86,8 @@ class Round10OpsSpec extends AnyFunSuite {
       s"heavy=$heavyHits light=$lightHits")
 
     // Never a full sort: top-k plans as TakeOrderedAndProject.
-    val plan = sel.queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(PlanShape(sel).nodesOf[TakeOrderedAndProjectExec].nonEmpty,
+      sel.queryExecution.executedPlan.toString)
 
     // Non-positive weights fail loudly, not silently.
     val bad = df.withColumn("w", when(col("id") === 500L, 0.0).otherwise(col("w")))
@@ -126,8 +128,8 @@ class Round10OpsSpec extends AnyFunSuite {
       Set("apple", "elderberry"))
 
     // Top-k per doc runs as a group-limit, not a full per-doc sort buffer.
-    val plan = top.queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"), plan)
+    assert(PlanShape(top).nodesOf[WindowGroupLimitExec].nonEmpty,
+      top.queryExecution.executedPlan.toString)
   }
 
   test("quantizeInt8: hand values, bounds, zero/null vectors, quantized recall") {
@@ -298,8 +300,8 @@ class Round10OpsSpec extends AnyFunSuite {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(again === ids)
 
-    val plan = sel.queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"), plan)
+    assert(PlanShape(sel).nodesOf[WindowGroupLimitExec].nonEmpty,
+      sel.queryExecution.executedPlan.toString)
   }
 
   test("graft_quantize_i8 is registered on the SQL surface") {

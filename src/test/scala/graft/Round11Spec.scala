@@ -140,10 +140,8 @@ class Round11Spec extends AnyFunSuite {
     val probe = Similarity.probeIvfPqIndex(reloaded, meta2, raw,
       emb.where(org.apache.spark.sql.functions.col("vec_id") < 3),
       "vec_id", "embedding", k = 5, nProbe = 2, rerank = 2)
-    val plan = probe.queryExecution.executedPlan.toString
-    val pruned = "PartitionFilters: \\[([^\\]]*)\\]".r
-      .findAllMatchIn(plan).exists(_.group(1).trim.nonEmpty)
-    assert(pruned, s"probe scan must prune cell partitions:\n$plan")
+    assert(PlanShape(probe).prunedByLiteralIn,
+      s"probe scan must prune cell partitions:\n${probe.queryExecution.executedPlan}")
     assert(probe.count() > 0)
   }
 }

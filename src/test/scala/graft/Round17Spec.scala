@@ -20,28 +20,25 @@ class Round17Spec extends AnyFunSuite {
     conf.set("fs.r17ft.impl", classOf[ThrowingSetTimesFs].getName)
     val dir = java.nio.file.Files.createTempDirectory("r17_lock_ft")
     val path = "r17ft://" + dir.toString + "/idx"
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
     try {
-      System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
       // 400 ms horizon → ~100 ms beats; the body outlives several beats,
       // each of which hits the RuntimeException-throwing setTimes. The
       // r16 loop caught only UnsupportedOperation/IOException — anything
       // else killed the daemon SILENTLY; r17 degrades loudly instead.
-      val got = WriterLock.withLock(spark, path, "ft-writer", staleAfterMs = 400L) {
-        Thread.sleep(1200L)
-        42
+      val (got, err) = LogCapture.warnings("graft.io.WriterLock") {
+        WriterLock.withLock(spark, path, "ft-writer", staleAfterMs = 400L) {
+          Thread.sleep(1200L)
+          42
+        }
       }
       assert(got == 42)
       val lock = WriterLock.lockPath(path)
       val fs = lock.getFileSystem(conf)
       assert(!fs.exists(lock), "release must still free the lock")
-      val err = new String(errBuf.toByteArray, "UTF-8")
       assert(err.contains("heartbeat refresh failed") &&
         err.contains("heartbeat disabled"),
-        s"the degrade must be LOUD, got stderr: '$err'")
+        s"the degrade must be LOUD, got warnings: '$err'")
     } finally {
-      System.setErr(realErr)
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }

@@ -389,16 +389,12 @@ class Round18Spec extends AnyFunSuite {
       // Both attempts failing with NO new owner: the aside must be LEFT
       // (the only record of the live writer), loudly.
       FalseStaleFs.failRenameBacks.set(2)
-      val errBuf = new java.io.ByteArrayOutputStream()
-      val realErr = System.err
-      val e2 = try {
-        System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+      val (e2, err) = LogCapture.warnings("graft.io.WriterLock") {
         intercept[WriterLock.ConcurrentWriterException] {
           WriterLock.withLock(spark, path, "breaker2", staleAfterMs = 60000L)(fail())
         }
-      } finally System.setErr(realErr)
+      }
       assert(e2.getMessage.contains("another writer holds"), e2.getMessage)
-      val err = new String(errBuf.toByteArray, "UTF-8")
       assert(err.contains("leaving the aside"), s"must be loud, got: '$err'")
       val aside = fs.listStatus(lock.getParent)
         .map(_.getPath.getName).filter(_.contains(".breaking."))
@@ -416,24 +412,21 @@ class Round18Spec extends AnyFunSuite {
     conf.set("fs.r18alt.impl", classOf[AlternatingSetTimesFs].getName)
     val dir = java.nio.file.Files.createTempDirectory("r18_lock_alt")
     val path = "r18alt://" + dir.toString + "/idx"
-    val errBuf = new java.io.ByteArrayOutputStream()
-    val realErr = System.err
     try {
-      System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
       // ~100 ms beats; every beat fails, alternating wrapped/IO. The
       // 3-consecutive-wrapped disable must never trip (the r17 counter
       // did not reset on the IOException arm, so the alternation would
       // have disabled the heartbeat and mislabeled it 'consecutive').
-      val got = WriterLock.withLock(spark, path, "alt-writer", staleAfterMs = 400L) {
-        Thread.sleep(1100L)
-        7
+      val (got, err) = LogCapture.warnings("graft.io.WriterLock") {
+        WriterLock.withLock(spark, path, "alt-writer", staleAfterMs = 400L) {
+          Thread.sleep(1100L)
+          7
+        }
       }
       assert(got == 7)
-      val err = new String(errBuf.toByteArray, "UTF-8")
       assert(!err.contains("heartbeat disabled"),
         s"alternating failures must not disable the heartbeat: '$err'")
     } finally {
-      System.setErr(realErr)
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }

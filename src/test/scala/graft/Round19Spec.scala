@@ -177,6 +177,48 @@ class Round19Spec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  test("BareLocalAbstractFs: overwriting a checksummed file drops its stale .crc") {
+    import org.apache.hadoop.fs.{CreateFlag, FileContext, LocalFileSystem, Options, Path}
+    val dir = java.nio.file.Files.createTempDirectory("graft_barecrc").toFile
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val checked = new LocalFileSystem()
+    checked.initialize(new java.net.URI("file:///"), conf)
+    val bare = FileContext.getFileContext(
+      new graft.io.BareLocalAbstractFs(new java.net.URI("file:///"), conf), conf)
+    def writeChecked(p: Path, text: String): Unit = {
+      val out = checked.create(p, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    def writeBare(p: Path, text: String): Unit = {
+      val out = bare.create(p, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    def readChecked(p: Path): String = {
+      val in = checked.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    try {
+      // Overwrite in place (a checkpoint file rewritten after the hatch
+      // was switched on).
+      val f = new Path(s"$dir/offsets")
+      writeChecked(f, "checksummed bytes")
+      assert(new java.io.File(s"$dir/.offsets.crc").exists)
+      writeBare(f, "bare bytes, a different length")
+      assert(readChecked(f) == "bare bytes, a different length")
+
+      // Rename onto a checksummed file (the temp-file-then-rename commit).
+      val g = new Path(s"$dir/commit")
+      writeChecked(g, "old commit")
+      val tmp = new Path(s"$dir/commit.tmp")
+      writeBare(tmp, "new commit!")
+      bare.rename(tmp, g, Options.Rename.OVERWRITE)
+      assert(readChecked(g) == "new commit!")
+    } finally {
+      checked.close()
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+  }
+
   test("stringArgs sweep: pq_adc summarizes its codebook") {
     val book = Array.fill(4)(Array.fill(16)(Array.fill(8)(0.25)))
     val df = spark.range(10).select(

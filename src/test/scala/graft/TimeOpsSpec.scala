@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -71,11 +72,11 @@ class TimeOpsSpec extends AnyFunSuite {
   }
 
   test("asofJoin: single shuffle — one Exchange, no join operator in the plan") {
-    val plan = TimeOps.asofJoin(trades, quotes, Seq("user_id"),
+    val asof = TimeOps.asofJoin(trades, quotes, Seq("user_id"),
       leftTime = "tts", rightTime = "qts", rightCols = Seq("price"))
-      .queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1, plan)
-    assert(!plan.contains("Join"), plan)
+    val shape = PlanShape(asof)
+    assert(shape.exchanges.size === 1 && shape.hashKeys.size === 1, shape.plan.toString)
+    assert(shape.joins.isEmpty, shape.plan.toString)
   }
 
   test("asofJoin forward: earliest at-or-after, ties match, unmatched null") {
@@ -137,12 +138,12 @@ class TimeOpsSpec extends AnyFunSuite {
   }
 
   test("asofJoin nearest: still a single Exchange") {
-    val plan = TimeOps.asofJoin(trades, quotes, Seq("user_id"),
+    val asof = TimeOps.asofJoin(trades, quotes, Seq("user_id"),
       leftTime = "tts", rightTime = "qts", rightCols = Seq("price"),
       direction = "nearest")
-      .queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1, plan)
-    assert(!plan.contains("Join"), plan)
+    val shape = PlanShape(asof)
+    assert(shape.exchanges.size === 1 && shape.hashKeys.size === 1, shape.plan.toString)
+    assert(shape.joins.isEmpty, shape.plan.toString)
   }
 
   test("asofJoin: plain numeric time columns work (generic ordering + subtraction)") {
@@ -212,10 +213,11 @@ class TimeOpsSpec extends AnyFunSuite {
   }
 
   test("rangeJoinPoint: equi-join plan, no nested-loop/cartesian") {
-    val plan = TimeOps.rangeJoinPoint(intervals, points, Seq("user_id"),
+    val joined = TimeOps.rangeJoinPoint(intervals, points, Seq("user_id"),
       "start", "end", "pts", binSeconds = 600)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
+    val shape = PlanShape(joined)
+    assert(shape.nodesOf[BroadcastNestedLoopJoinExec].isEmpty &&
+      shape.nodesOf[CartesianProductExec].isEmpty, shape.plan.toString)
   }
 
   // ---------------------------------------------------------- sessionize
@@ -252,9 +254,10 @@ class TimeOpsSpec extends AnyFunSuite {
   }
 
   test("sessionize: one Exchange for both windows") {
-    val plan = TimeOps.sessionize(evts, Seq("user_id"), "ts",
-      expr("INTERVAL 30 MINUTES")).queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1, plan)
+    val sessions = TimeOps.sessionize(evts, Seq("user_id"), "ts",
+      expr("INTERVAL 30 MINUTES"))
+    val shape = PlanShape(sessions)
+    assert(shape.exchanges.size === 1 && shape.hashKeys.size === 1, shape.plan.toString)
   }
 
   test("streaming ingest dedup: foreachBatch + batch-vs-corpus near-dup filter") {

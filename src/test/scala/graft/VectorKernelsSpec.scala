@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.ProjectExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorKernels
@@ -127,9 +128,10 @@ class VectorKernelsSpec extends AnyFunSuite {
     // `*(n)` marks operators fused into WholeStageCodegen stage n; the
     // Project evaluating the kernel must carry it (a CodegenFallback
     // expression would evict its whole Project from the stage).
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.exists(l =>
-      l.trim.matches("""\*\(\d+\) Project .*graft_cosine.*""")), plan)
+    val shape = PlanShape(q)
+    assert(shape.kernelInCodegen("graft_cosine") &&
+      shape.kernelNodes("graft_cosine").forall(_._1.isInstanceOf[ProjectExec]),
+      shape.plan.toString)
     // And the generated source actually contains the fused loop.
     val gen = org.apache.spark.sql.execution.debug.codegenString(q.queryExecution.executedPlan)
     assert(gen.contains("getDouble") && gen.contains("Math.sqrt"), gen.take(2000))
@@ -147,10 +149,11 @@ class VectorKernelsSpec extends AnyFunSuite {
       graft.functions.LangIdKernel.languageId(col("t")).as("lang"),
       graft.functions.TextStatsKernel.stats(col("t"), 3).as("st"),
       graft.functions.CentroidKernels.nearestIndex(col("v"), mat).as("cell"))
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.linesIterator.exists(l =>
-      l.trim.matches("""\*\(\d+\) Project .*graft_langid.*""")), plan)
-    assert(plan.contains("graft_text_stats") && plan.contains("graft_nearest_centroids"), plan)
+    val carriers = Seq("graft_langid", "graft_text_stats", "graft_nearest_centroids")
+      .flatMap(PlanShape(q).kernelNodes)
+    assert(carriers.size === 3 && carriers.forall(_._2) &&
+      carriers.map(_._1).distinct.size === 1 &&
+      carriers.head._1.isInstanceOf[ProjectExec], q.queryExecution.executedPlan.toString)
     assert(q.collect().length === 10)
   }
 }
