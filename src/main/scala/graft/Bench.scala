@@ -28,7 +28,7 @@ object Bench {
   private def materialize(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
-  private def iotSpec(rows: Long, partitions: Int): TableSpec = {
+  private[graft] def iotSpec(rows: Long, partitions: Int): TableSpec = {
     def c(n: String, t: String, s: ColumnStrategy) = ColumnSpec(n, t, s)
     TableSpec("iot", rows, Seq(
       c("internal_device_id", "bigint", ColumnStrategy.Sequence(0x100000000L, 1)),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.seed.Seeds
 import graft.dist.Distributions
+import graft.functions.{GenString, StringProgram}
 import graft.spec._
 
 /** Metadata needed to *reconstruct* a parent primary key inside a child
@@ -21,8 +22,9 @@ final case class BuildContext(
     pkInfo: Map[String, PkInfo] = Map.empty)
 
 /** Compiles a [[ColumnSpec]] to a pure `Column` expression of the row-id
-  * column. Everything here is built from `org.apache.spark.sql.functions` —
-  * codegen'd, partition-independent, zero UDFs on the default path.
+  * column. Everything here is built from `org.apache.spark.sql.functions`
+  * and the native [[GenString]] kernel — codegen'd, partition-independent,
+  * zero UDFs on the default path.
   * (Strategy semantics per SURVEY.md §2.2-2.5; reference files cited per
   * builder.) */
 object ColumnCompiler {
@@ -46,7 +48,7 @@ object ColumnCompiler {
 
   private def decorate(spec: ColumnSpec, value: Column): Column = {
     val formatted = spec.format match {
-      case Some(f) => format_string(f, value)
+      case Some(f) => GenString.format(f, value)
       case None => value
     }
     (spec.prefix, spec.suffix) match {
@@ -79,7 +81,8 @@ object ColumnCompiler {
       element_at(arr, idx.cast(IntegerType) + lit(1))
 
     case ColumnStrategy.Pattern(p) =>
-      PatternCompiler.compile(p, seed, id)
+      val isPk = ctx.pkInfo.get(ctx.tableName).exists(_.column == spec.name)
+      PatternCompiler.compile(p, seed, id, injective = isPk)
 
     case ColumnStrategy.Template(t, escapeMode, words, baseCol) =>
       // Under raw-values seeding the base value is the stringified seed
@@ -187,21 +190,13 @@ object ColumnCompiler {
 
   /** Deterministic UUID-shaped string from two xxhash64 draws (not
     * RFC-4122). Ref: core/engine/columns/uuid.py:15-58. */
-  def uuidColumn(seed: Long, id: Column): Column = {
-    val h1 = Seeds.cellSeed(seed, id)
-    val h2 = xxhash64(lit(seed), id, lit(1))
-    format_string("%08x-%04x-%04x-%04x-%012x",
-      shiftrightunsigned(h1, 32).bitwiseAND(lit(0xFFFFFFFFL)),
-      shiftrightunsigned(h1, 16).bitwiseAND(lit(0xFFFFL)),
-      h1.bitwiseAND(lit(0xFFFFL)),
-      shiftrightunsigned(h2, 48).bitwiseAND(lit(0xFFFFL)),
-      h2.bitwiseAND(lit(0xFFFFFFFFFFFFL)))
-  }
+  def uuidColumn(seed: Long, id: Column): Column =
+    GenString.column(id, StringProgram.single(Seq(StringProgram.Uuid(seed))))
 
   /** Rebuild a parent PK value for a sampled parent row index. */
   def reconstructPk(pk: PkInfo, parentIdx: Column): Column = pk.strategy match {
     case ColumnStrategy.Sequence(start, step) => parentIdx * lit(step) + lit(start)
-    case ColumnStrategy.Pattern(p) => PatternCompiler.compile(p, pk.columnSeed, parentIdx)
+    case ColumnStrategy.Pattern(p) => PatternCompiler.compile(p, pk.columnSeed, parentIdx, injective = true)
     case ColumnStrategy.Uuid => uuidColumn(pk.columnSeed, parentIdx)
     case other =>
       throw SpecError(s"primary key ${pk.table}.${pk.column} uses ${other.getClass.getSimpleName}; " +
@@ -247,15 +242,10 @@ object ColumnCompiler {
     * budget). Intentionally conservative, not exact. */
   private[graft] def estimateNodes(s: ColumnStrategy): Int = s match {
     case _: ColumnStrategy.Sequence | _: ColumnStrategy.Constant => 3
-    case _: ColumnStrategy.Range | ColumnStrategy.Uuid => 15
+    case _: ColumnStrategy.Range => 15
     case v: ColumnStrategy.Values => 5 + v.values.length + 3 * v.weights.length
-    case p: ColumnStrategy.Pattern =>
-      5 + PatternCompiler.tokenize(p.pattern).map {
-        case PatternCompiler.Alpha(w) => 8 * w
-        case _ => 8
-      }.sum
-    case t: ColumnStrategy.Template =>
-      5 + TemplateCompiler.parse(t.template, t.escapeSpecialChars).map(_.size * 8).sum
+    // one string kernel node each
+    case ColumnStrategy.Uuid | _: ColumnStrategy.Pattern | _: ColumnStrategy.Template => 1
     case i: ColumnStrategy.ILText =>
       10 * i.paragraphs._2 * i.sentences._2 * i.words._2
     case st: ColumnStrategy.Struct => 2 + st.fields.map(f => estimateNodes(f._2.strategy)).sum

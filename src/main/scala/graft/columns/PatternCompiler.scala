@@ -1,20 +1,20 @@
 package graft.columns
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.internal.SQLConf
+import graft.functions.{GenString, StringProgram}
 import graft.seed.Seeds
 import graft.spec.SpecError
 
-/** Compiles `"ORD-{digit:4}-{alpha:3}"`-style placeholder patterns into a
-  * single `concat(...)` of built-in expressions — every placeholder is a
-  * deterministic function of (columnSeed, rowId, position).
+/** Compiles `"ORD-{digit:4}-{alpha:3}"`-style placeholder patterns into one
+  * [[GenString]] kernel — every placeholder is a deterministic function of
+  * (columnSeed, rowId, position).
   *
   * Placeholders (semantics per dbldatagen/core/engine/columns/string.py:70-246):
   *   {seq}      — row id + 1 as text; {seq:N} zero-pads to width N (N<=24)
   *   {uuid}     — deterministic uuid-shaped string
   *   {digit:N}  — N decimal digits, zero-padded (N<=18)
-  *   {alpha:N}  — N uppercase letters, each an independent hash pick (N<=64)
+  *   {alpha:N}  — N uppercase letters, one hash pick per three (N<=64)
   *   {hex:N}    — N lowercase hex digits (N<=15)
   * Width caps keep pmod moduli within exact Long range.
   */
@@ -57,29 +57,48 @@ object PatternCompiler {
     out.result()
   }
 
-  def compile(pattern: String, columnSeed: Long, id: Column): Column = {
-    val parts = tokenize(pattern).zipWithIndex.map { case (tok, k) =>
-      val tokSeed = Seeds.subSeed(columnSeed, k)
-      tok match {
-        case Literal(s) => lit(s)
-        case Seq_(None) => (id + lit(1L)).cast("string")
-        case Seq_(Some(w)) => lpad((id + lit(1L)).cast("string"), w, "0")
-        case UuidTok => ColumnCompiler.uuidColumn(tokSeed, id)
-        case Digit(w) =>
-          val m = math.pow(10, w).toLong
-          lpad(pmod(Seeds.cellSeed(tokSeed, id), lit(m)).cast("string"), w, "0")
-        case Hex(w) =>
-          val m = 1L << (4 * w)
-          lower(lpad(hex(pmod(Seeds.cellSeed(tokSeed, id), lit(m))), w, "0"))
-        case Alpha(w) =>
-          // Grouped table lookups: one hash drives three chars (inline
-          // per-char hashing costs ~3KB of generated Java per char).
-          CharTables.run("ABCDEFGHIJKLMNOPQRSTUVWXYZ", w, tokSeed, id)
-      }
+  /** The pattern as one [[GenString]] kernel of the row id. With
+    * `injective` (a primary-key column and its FK replays) a pattern without
+    * `{seq}`/`{uuid}` whose value space fits a [[StringProgram.Lattice]]
+    * renders a seed-keyed permutation of the id instead of independent
+    * draws, so distinct rows below the pattern's cardinality never share a
+    * key. */
+  def compile(pattern: String, columnSeed: Long, id: Column, injective: Boolean = false): Column =
+    GenString.column(id, program(pattern, columnSeed, injective))
+
+  private[graft] def program(pattern: String, columnSeed: Long, injective: Boolean): StringProgram = {
+    val toks = tokenize(pattern)
+    lattice(toks).filter(_ => injective) match {
+      case Some(parts) => StringProgram.single(Seq(StringProgram.Lattice(columnSeed, parts)))
+      case None => StringProgram.single(toks.zipWithIndex.flatMap { case (tok, k) =>
+        val tokSeed = Seeds.subSeed(columnSeed, k)
+        tok match {
+          case Literal(s) => Seq(StringProgram.Text(s))
+          case Seq_(pad) => Seq(StringProgram.SeqNum(pad.getOrElse(0), SQLConf.get.ansiEnabled))
+          case UuidTok => Seq(StringProgram.Uuid(tokSeed))
+          case Digit(w) => Seq(StringProgram.Digits(tokSeed, w))
+          case Hex(w) => Seq(StringProgram.HexDigits(tokSeed, w, upper = false))
+          case Alpha(w) => TemplateCompiler.runTokens(Upper, w, tokSeed)
+        }
+      })
     }
-    if (parts.length == 1) parts.head else concat(parts: _*)
   }
 
-  private def substringPick(zeroBasedIdx: Column): Column =
-    lit("ABCDEFGHIJKLMNOPQRSTUVWXYZ").substr(zeroBasedIdx + lit(1), lit(1))
+  private val Upper = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+  /** The mixed-radix fields of a pattern made only of literals and
+    * `{digit}`/`{alpha}`/`{hex}` fields whose value space fits a
+    * [[StringProgram.Lattice]]; None otherwise. */
+  private def lattice(toks: List[Token]): Option[Seq[Either[String, StringProgram.Field]]] = {
+    val parts = toks.map {
+      case Literal(s) => Some(Left(s))
+      case Digit(w) => Some(Right(StringProgram.Field("0123456789", w)))
+      case Alpha(w) => Some(Right(StringProgram.Field(Upper, w)))
+      case Hex(w) => Some(Right(StringProgram.Field("0123456789abcdef", w)))
+      case _: Seq_ | UuidTok => None
+    }
+    val fields = parts.flatten.collect { case Right(f) => BigInt(f.charset.length).pow(f.width) }
+    if (parts.contains(None) || fields.isEmpty || fields.product > StringProgram.MaxLattice) None
+    else Some(parts.flatten)
+  }
 }

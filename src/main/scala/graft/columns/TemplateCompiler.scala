@@ -1,11 +1,12 @@
 package graft.columns
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Literal, Upper}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import graft.functions.{GenString, StringProgram}
 import graft.seed.Seeds
 
-/** Legacy char-class template engine, compiled to pure Column expressions
+/** Legacy char-class template engine, compiled to one [[GenString]] kernel
   * (the reference implements this as a 550-line numpy masked-array pandas
   * UDF — dbldatagen/text_generators.py:413-960; token semantics :431-501).
   *
@@ -113,21 +114,27 @@ object TemplateCompiler {
       throw graft.spec.SpecError(
         s"template '$template' uses indexed base-value tokens (\\v0..\\v9) but no " +
         "baseColumn is set; set ColumnStrategy.Template(baseColumn = Some(<array column>))")
-    val compiled = alts.zipWithIndex.map { case (toks, altIdx) =>
-      compileAlt(toks, words, Seeds.subSeed(columnSeed, 1000 + altIdx), id, baseValue,
-        baseElements)
-    }
-    if (compiled.length == 1) compiled.head
+    val altSeeds = alts.indices.map(i => Seeds.subSeed(columnSeed, 1000 + i))
+    val pickSeed = columnSeed ^ 0x51AB5EEDL
+    if (!alts.exists(_.exists(_.isInstanceOf[BaseVal])))
+      GenString.column(id, StringProgram(alts.zip(altSeeds).map { case (toks, s) =>
+        altTokens(toks, words, s).collect { case Left(ts) => ts }.flatten }, pickSeed))
     else {
-      val pick = pmod(Seeds.cellSeed(columnSeed ^ 0x51AB5EEDL, id), lit(compiled.length.toLong))
-      compiled.init.zipWithIndex.foldRight(compiled.last) { case ((c, i), rest) =>
-        when(pick === lit(i.toLong), c).otherwise(rest)
+      val compiled = alts.zip(altSeeds).map { case (toks, s) =>
+        compileAlt(toks, words, s, id, baseValue, baseElements)
+      }
+      if (compiled.length == 1) compiled.head
+      else {
+        val pick = pmod(Seeds.cellSeed(pickSeed, id), lit(compiled.length.toLong))
+        compiled.init.zipWithIndex.foldRight(compiled.last) { case ((c, i), rest) =>
+          when(pick === lit(i.toLong), c).otherwise(rest)
+        }
       }
     }
   }
 
-  /** Adjacent same-charset tokens merged into one run (codegen: one hash
-    * can drive a whole run of digits/hex chars). */
+  /** Adjacent same-charset tokens merged into one run (one hash can drive a
+    * whole group of digits/hex chars). */
   private final case class Run(chars: String, n: Int) extends Tok
 
   private def mergeRuns(toks: List[Tok]): List[Tok] = toks.foldRight(List.empty[Tok]) {
@@ -136,30 +143,42 @@ object TemplateCompiler {
     case (t, rest) => t :: rest
   }
 
-  private def compileAlt(toks: List[Tok], words: Seq[String], altSeed: Long, id: Column,
-      baseValue: Option[Column], baseElements: Option[Seq[Column]] = None): Column = {
-    lazy val base = baseValue.getOrElse(id.cast("string"))
-    val parts = mergeRuns(toks).zipWithIndex.map { case (tok, k) =>
+  /** Each token of one alternative, in order: its kernel tokens, or the
+    * base-value token itself. Token k draws from `subSeed(altSeed, k)`. */
+  private def altTokens(toks: List[Tok], words: Seq[String], altSeed: Long)
+      : List[Either[Seq[StringProgram.Tok], BaseVal]] =
+    mergeRuns(toks).zipWithIndex.map { case (tok, k) =>
       val tokSeed = Seeds.subSeed(altSeed, k)
       tok match {
-        case Lit(s) => lit(s)
-        case Run(cs, n) => runColumn(cs, n, tokSeed, id)
+        case Lit(s) => Left(Seq(StringProgram.Text(s)))
+        case Run(cs, n) => Left(runTokens(cs, n, tokSeed))
         // defensive: mergeRuns folds every Charset into a Run; this arm only
         // keeps the match exhaustive over the public Tok hierarchy
-        case Charset(cs) => runColumn(cs, 1, tokSeed, id)
-        case IntTok(max) =>
-          pmod(Seeds.cellSeed(tokSeed, id), lit(max + 1)).cast("string")
-        case Word(upper) =>
-          val idx = pmod(Seeds.cellSeed(tokSeed, id), lit(words.length.toLong)).cast(IntegerType)
-          val w = element_at(typedLit(words), idx + lit(1))
-          if (upper) org.apache.spark.sql.functions.upper(w) else w
-        case BaseVal(None) => base.cast("string")
-        case BaseVal(Some(i)) => baseElements match {
-          // direct column indexing (out-of-range -> null, matching
-          // element_at's null semantics on short arrays)
-          case Some(es) => if (i < es.length) es(i).cast("string") else lit(null).cast("string")
-          case None => element_at(base, i + 1).cast("string")
-        }
+        case Charset(cs) => Left(runTokens(cs, 1, tokSeed))
+        case IntTok(max) => Left(Seq(StringProgram.IntNum(tokSeed, max + 1)))
+        case Word(upper) => Left(Seq(StringProgram.WordPick(tokSeed,
+          if (upper) words.map(w => Option(Upper(Literal(w)).eval()).map(_.toString).orNull)
+          else words)))
+        case b: BaseVal => Right(b)
+      }
+    }
+
+  /** An alternative with base-value tokens: a `concat` of the base values
+    * and one kernel per stretch of the other tokens. */
+  private def compileAlt(toks: List[Tok], words: Seq[String], altSeed: Long, id: Column,
+      baseValue: Option[Column], baseElements: Option[Seq[Column]]): Column = {
+    lazy val base = baseValue.getOrElse(id.cast("string"))
+    val parts = altTokens(toks, words, altSeed).foldRight(List.empty[Either[Seq[StringProgram.Tok], BaseVal]]) {
+      case (Left(a), Left(b) :: rest) => Left(a ++ b) :: rest
+      case (t, rest) => t :: rest
+    }.map {
+      case Left(ts) => GenString.column(id, StringProgram.single(ts))
+      case Right(BaseVal(None)) => base.cast("string")
+      case Right(BaseVal(Some(i))) => baseElements match {
+        // direct column indexing (out-of-range -> null, matching
+        // element_at's null semantics on short arrays)
+        case Some(es) => if (i < es.length) es(i).cast("string") else lit(null).cast("string")
+        case None => element_at(base, i + 1).cast("string")
       }
     }
     parts match {
@@ -169,33 +188,18 @@ object TemplateCompiler {
     }
   }
 
-  /** A run of `n` chars from one charset. Decimal and hex runs derive whole
-    * groups from a single hash (`lpad(pmod(h, L^g))` — one expression per
-    * up-to-18/15-char group); other charsets pick each char with its own
-    * two-argument hash. Keeps generated code small: the naive
-    * one-xxhash64-per-char form costs ~3KB of Java per char and overflows
-    * the 64KB whole-stage-codegen method limit on wide tables. */
-  private def runColumn(cs: String, n: Int, runSeed: Long, id: Column): Column = {
-    def grouped(groupMax: Int)(one: (Long, Int) => Column): Column = {
-      val groups = (0 until n).grouped(groupMax).zipWithIndex.map { case (g, gi) =>
-        one(Seeds.subSeed(runSeed, gi), g.size)
-      }.toSeq
-      if (groups.length == 1) groups.head else concat(groups: _*)
+  /** A run of `n` chars from one charset. Decimal and hex runs take up to
+    * 18 / 15 chars from one hash (`lpad(pmod(h, L^g))`); any other charset
+    * takes three chars per hash. Group `gi` draws from `subSeed(runSeed, gi)`. */
+  private[columns] def runTokens(cs: String, n: Int, runSeed: Long): Seq[StringProgram.Tok] = {
+    val (group, tok): (Int, (Long, Int) => StringProgram.Tok) = cs match {
+      case "0123456789" => (18, StringProgram.Digits(_, _))
+      case "0123456789abcdef" => (15, StringProgram.HexDigits(_, _, false))
+      case "0123456789ABCDEF" => (15, StringProgram.HexDigits(_, _, true))
+      case _ => (3, StringProgram.Chars(_, cs, _))
     }
-    cs match {
-      case "0123456789" =>
-        grouped(18) { (s, g) =>
-          lpad(pmod(Seeds.cellSeed(s, id), lit(math.pow(10, g).toLong)).cast("string"), g, "0")
-        }
-      case "0123456789abcdef" =>
-        grouped(15) { (s, g) =>
-          lower(lpad(hex(pmod(Seeds.cellSeed(s, id), lit(1L << (4 * g)))), g, "0"))
-        }
-      case "0123456789ABCDEF" =>
-        grouped(15) { (s, g) =>
-          lpad(hex(pmod(Seeds.cellSeed(s, id), lit(1L << (4 * g)))), g, "0")
-        }
-      case _ => CharTables.run(cs, n, runSeed, id)
-    }
+    (0 until n).grouped(group).zipWithIndex.map { case (g, gi) =>
+      tok(Seeds.subSeed(runSeed, gi), g.size)
+    }.toSeq
   }
 }

@@ -142,7 +142,7 @@ object ShingleSketch {
       while (i < until) {
         if (!sig.isNullAt(i)) {
           if (!first) { buf(len) = ','.toByte; len += 1 }
-          len = writeDecimal(sig.getLong(i), buf, len)
+          len = StringProgram.writeDecimal(sig.getLong(i), buf, len)
           first = false
         }
         i += 1
@@ -152,25 +152,6 @@ object ShingleSketch {
     }
     new GenericArrayData(out)
   }
-
-  private val MinLongDigits = java.lang.Long.toString(Long.MinValue).getBytes("US-ASCII")
-
-  /** Writes `v` in decimal (`Long.toString` form) at `pos`; returns the end. */
-  private def writeDecimal(v: Long, buf: Array[Byte], pos: Int): Int =
-    if (v == Long.MinValue) {
-      System.arraycopy(MinLongDigits, 0, buf, pos, MinLongDigits.length)
-      pos + MinLongDigits.length
-    } else {
-      var p = pos
-      var x = v
-      if (x < 0) { buf(p) = '-'.toByte; p += 1; x = -x }
-      var digits = 1
-      var t = x / 10
-      while (t != 0) { digits += 1; t /= 10 }
-      var end = p + digits
-      while (end > p) { end -= 1; buf(end) = ('0' + (x % 10)).toByte; x /= 10 }
-      p + digits
-    }
 
   case class BandKeys(child: Expression, bands: Int, rowsPerBand: Int)
       extends UnaryExpression {

@@ -71,6 +71,15 @@ class PlanShapeSpec extends AnyFunSuite {
       shape.nodes.filter(_.children.isEmpty).forall(_.isInstanceOf[RangeExec]), shape.plan.toString)
   }
 
+  test("an IOT-shaped table renders its format, pattern and template columns in the string kernel, inside codegen") {
+    val shape = PlanShape(Generator.generate(spark, DataGenPlan(Seq(Bench.iotSpec(1000, 2)), 7L))("iot"))
+    val kernels = shape.nodes.flatMap(_.expressions.flatMap(_.collect {
+      case g: graft.functions.GenString => g }))
+    assert(kernels.size == 3, shape.plan.toString)
+    assert(shape.kernelInCodegen("graft_gen_string"), shape.plan.toString)
+    assert(!shape.hasKernel("format_string"), shape.plan.toString)
+  }
+
   test("near-dup operators shuffle only on their bucket key or on document ids") {
     val idCols = Set("id", "id_a", "id_b", "doc_id")
     def check(bucket: String)(run: DataFrame => DataFrame): Unit = {

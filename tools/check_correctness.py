@@ -60,7 +60,9 @@ def canon(df):
 def main():
     if "--no-verify" not in sys.argv:
         print(f"[check] running graft.Verify {SF} -> {OUT}")
-        env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+        # One Spark core per CPU this process may run on (what nproc counts).
+        env = dict(os.environ)
+        env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
             capture_output=True, text=True, env=env, cwd="/root/repo")

@@ -2,12 +2,19 @@
 # Board run via plain java against a FROZEN classes copy (so concurrent sbt
 # compiles can't swap class files mid-run), per the r13/r14 bench protocol.
 # Usage: tools/run_board.sh <outfile> [extra env...]
+# Heap: half of MemTotal clamped to 2-8 GB (SPARK_DRIVER_MEM overrides);
+# cores: nproc (SPARK_GRAFT_CPUS overrides).
 set -e
 OUT="${1:?usage: run_board.sh <outfile>}"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 FROZEN=/tmp/graft_frozen_classes
 rm -rf "$FROZEN"
-cp -r /root/repo/target/scala-2.13/classes "$FROZEN"
-ADDOPENS=$(cat /root/repo/target/addopens.txt)
-cd /root/repo
-SPARK_GRAFT_BENCH_OUT="$OUT" java $ADDOPENS -Xmx48g \
-  -cp "$FROZEN:/opt/spark/jars/*" graft.Bench
+cp -r "$ROOT/target/scala-2.13/classes" "$FROZEN"
+ADDOPENS=$(cat "$ROOT/target/addopens.txt")
+# Spark's jars: $SPARK_HOME/jars, else the unmanagedBase of build.sbt.
+JARS="${SPARK_HOME:+$SPARK_HOME/jars}"
+JARS="${JARS:-$(sed -n 's/^unmanagedBase := file("\(.*\)").*/\1/p' "$ROOT/build.sbt")}"
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+cd "$ROOT"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" SPARK_GRAFT_BENCH_OUT="$OUT" java $ADDOPENS -Xmx"$HEAP" \
+  -cp "$FROZEN:$JARS/*" graft.Bench
