@@ -191,7 +191,7 @@ object ColumnCompiler {
   /** Deterministic UUID-shaped string from two xxhash64 draws (not
     * RFC-4122). Ref: core/engine/columns/uuid.py:15-58. */
   def uuidColumn(seed: Long, id: Column): Column =
-    GenString.column(id, StringProgram.single(Seq(StringProgram.Uuid(seed))))
+    GenString.column(id, StringProgram(Seq(StringProgram.Uuid(seed))))
 
   /** Rebuild a parent PK value for a sampled parent row index. */
   def reconstructPk(pk: PkInfo, parentIdx: Column): Column = pk.strategy match {
@@ -245,7 +245,8 @@ object ColumnCompiler {
     case _: ColumnStrategy.Range => 15
     case v: ColumnStrategy.Values => 5 + v.values.length + 3 * v.weights.length
     // one string kernel node each
-    case ColumnStrategy.Uuid | _: ColumnStrategy.Pattern | _: ColumnStrategy.Template => 1
+    case ColumnStrategy.Uuid | _: ColumnStrategy.Pattern => 1
+    case t: ColumnStrategy.Template => TemplateCompiler.nodeCount(t.template, t.escapeSpecialChars)
     case i: ColumnStrategy.ILText =>
       10 * i.paragraphs._2 * i.sentences._2 * i.words._2
     case st: ColumnStrategy.Struct => 2 + st.fields.map(f => estimateNodes(f._2.strategy)).sum

@@ -69,8 +69,8 @@ object PatternCompiler {
   private[graft] def program(pattern: String, columnSeed: Long, injective: Boolean): StringProgram = {
     val toks = tokenize(pattern)
     lattice(toks).filter(_ => injective) match {
-      case Some(parts) => StringProgram.single(Seq(StringProgram.Lattice(columnSeed, parts)))
-      case None => StringProgram.single(toks.zipWithIndex.flatMap { case (tok, k) =>
+      case Some(parts) => StringProgram(Seq(StringProgram.Lattice(columnSeed, parts)))
+      case None => StringProgram(toks.zipWithIndex.flatMap { case (tok, k) =>
         val tokSeed = Seeds.subSeed(columnSeed, k)
         tok match {
           case Literal(s) => Seq(StringProgram.Text(s))

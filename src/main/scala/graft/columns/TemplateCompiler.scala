@@ -7,7 +7,7 @@ import graft.functions.{GenString, StringProgram}
 import graft.seed.Seeds
 
 /** Legacy char-class template engine, compiled to one [[GenString]] kernel
-  * (the reference implements this as a 550-line numpy masked-array pandas
+  * per alternative (the reference implements this as a 550-line numpy masked-array pandas
   * UDF — dbldatagen/text_generators.py:413-960; token semantics :431-501).
   *
   * Tokens (default mode, `escapeSpecialChars = false`):
@@ -115,22 +115,30 @@ object TemplateCompiler {
         s"template '$template' uses indexed base-value tokens (\\v0..\\v9) but no " +
         "baseColumn is set; set ColumnStrategy.Template(baseColumn = Some(<array column>))")
     val altSeeds = alts.indices.map(i => Seeds.subSeed(columnSeed, 1000 + i))
-    val pickSeed = columnSeed ^ 0x51AB5EEDL
-    if (!alts.exists(_.exists(_.isInstanceOf[BaseVal])))
-      GenString.column(id, StringProgram(alts.zip(altSeeds).map { case (toks, s) =>
-        altTokens(toks, words, s).collect { case Left(ts) => ts }.flatten }, pickSeed))
+    val compiled = alts.zip(altSeeds).map { case (toks, s) =>
+      compileAlt(toks, words, s, id, baseValue, baseElements)
+    }
+    if (compiled.length == 1) compiled.head
     else {
-      val compiled = alts.zip(altSeeds).map { case (toks, s) =>
-        compileAlt(toks, words, s, id, baseValue, baseElements)
-      }
-      if (compiled.length == 1) compiled.head
-      else {
-        val pick = pmod(Seeds.cellSeed(pickSeed, id), lit(compiled.length.toLong))
-        compiled.init.zipWithIndex.foldRight(compiled.last) { case ((c, i), rest) =>
-          when(pick === lit(i.toLong), c).otherwise(rest)
-        }
+      val pick = pmod(Seeds.cellSeed(columnSeed ^ 0x51AB5EEDL, id), lit(compiled.length.toLong))
+      compiled.init.zipWithIndex.foldRight(compiled.last) { case ((c, i), rest) =>
+        when(pick === lit(i.toLong), c).otherwise(rest)
       }
     }
+  }
+
+  /** Expression nodes [[compile]] builds: per alternative one kernel per
+    * stretch of non-base tokens, two per base value and one `concat`; with
+    * several alternatives, the pick's hash plus one `when` per alternative. */
+  private[columns] def nodeCount(template: String, escapeSpecialChars: Boolean): Int = {
+    val alts = parse(template, escapeSpecialChars)
+    val perAlt = alts.map { toks =>
+      val bases = toks.count(_.isInstanceOf[BaseVal])
+      val stretches = toks.indices.count(k => !toks(k).isInstanceOf[BaseVal] &&
+        (k == 0 || toks(k - 1).isInstanceOf[BaseVal]))
+      stretches + 2 * bases + (if (stretches + bases > 1) 1 else 0)
+    }
+    perAlt.sum + (if (alts.length > 1) 4 + 3 * alts.length else 0)
   }
 
   /** Adjacent same-charset tokens merged into one run (one hash can drive a
@@ -163,8 +171,8 @@ object TemplateCompiler {
       }
     }
 
-  /** An alternative with base-value tokens: a `concat` of the base values
-    * and one kernel per stretch of the other tokens. */
+  /** One alternative: a single kernel, or with base-value tokens a `concat`
+    * of the base values and one kernel per stretch of the other tokens. */
   private def compileAlt(toks: List[Tok], words: Seq[String], altSeed: Long, id: Column,
       baseValue: Option[Column], baseElements: Option[Seq[Column]]): Column = {
     lazy val base = baseValue.getOrElse(id.cast("string"))
@@ -172,7 +180,7 @@ object TemplateCompiler {
       case (Left(a), Left(b) :: rest) => Left(a ++ b) :: rest
       case (t, rest) => t :: rest
     }.map {
-      case Left(ts) => GenString.column(id, StringProgram.single(ts))
+      case Left(ts) => GenString.column(id, StringProgram(ts))
       case Right(BaseVal(None)) => base.cast("string")
       case Right(BaseVal(Some(i))) => baseElements match {
         // direct column indexing (out-of-range -> null, matching

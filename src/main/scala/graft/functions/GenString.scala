@@ -77,7 +77,7 @@ case class IntegralFormat(child: Expression, spec: String)
   override lazy val replacement: Expression = child.dataType match {
     case ByteType | ShortType | IntegerType | LongType =>
       val bits = 8 * child.dataType.defaultSize
-      GenString(child, StringProgram.single(StringProgram.formatTokens(spec, bits).get))
+      GenString(child, StringProgram(StringProgram.formatTokens(spec, bits).get))
     case _ => FormatString(Literal(spec), child)
   }
   override def dataType: DataType = StringType
@@ -85,38 +85,30 @@ case class IntegralFormat(child: Expression, spec: String)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** A compiled token program: one or more alternatives, one picked per row by
-  * `pmod(xxhash64(lit(pickSeed), id), alternatives)`, each a sequence of
-  * tokens written left to right into one byte array sized by the tokens'
-  * upper bounds.
+/** A compiled token program: tokens written left to right into one byte
+  * array sized by their upper bounds.
   *
   * Every hashed token keeps the Column spelling's draw bit for bit:
   * `xxhash64(lit(s), id)` is `hashLong(id, hashLong(s, 42))`, and the seed
   * half is folded once when the token is built. A null child is skipped by
   * `xxhash64`, so its draw is the folded seed alone. */
-final case class StringProgram(alts: Seq[Seq[StringProgram.Tok]], pickSeed: Long = 0L) {
+final case class StringProgram(toks: Seq[StringProgram.Tok]) {
   import StringProgram._
-  require(alts.nonEmpty, "a string program needs at least one alternative")
 
-  private[this] val toks: Array[Array[Tok]] = alts.map(_.toArray).toArray
-  private[this] val bound: Array[Int] = toks.map(_.map(_.maxBytes).sum)
-  private[this] val pickFolded = fold(pickSeed)
+  private[this] val ts: Array[Tok] = toks.toArray
+  private[this] val bound: Int = ts.map(_.maxBytes).sum
 
   /** Only literal text and one integral conversion: the child is a value,
     * not a row id, and may be any integral type. */
-  def isFormat: Boolean = alts.forall(_.forall {
+  def isFormat: Boolean = toks.forall {
     case _: Text | _: FormatInt => true
     case _ => false
-  })
+  }
 
-  def nullable(childNullable: Boolean): Boolean = alts.exists(_.exists(_.nullable(childNullable)))
+  def nullable(childNullable: Boolean): Boolean = toks.exists(_.nullable(childNullable))
 
   def render(id: Long, idNull: Boolean): UTF8String = {
-    val a =
-      if (toks.length == 1) 0
-      else Math.floorMod(cell(pickFolded, id, idNull), toks.length.toLong).toInt
-    val ts = toks(a)
-    val buf = new Array[Byte](bound(a))
+    val buf = new Array[Byte](bound)
     var pos = 0
     var i = 0
     while (i < ts.length) {
@@ -127,13 +119,10 @@ final case class StringProgram(alts: Seq[Seq[StringProgram.Tok]], pickSeed: Long
     if (pos == buf.length) UTF8String.fromBytes(buf) else UTF8String.fromBytes(buf, 0, pos)
   }
 
-  override def toString: String =
-    alts.map(_.mkString(" ")).mkString(if (alts.size > 1) s"pick($pickSeed): " else "", " | ", "")
+  override def toString: String = toks.mkString(" ")
 }
 
 object StringProgram {
-
-  def single(toks: Seq[Tok]): StringProgram = StringProgram(Seq(toks))
 
   /** `hashLong(seed, 42)`: the constant half of `xxhash64(lit(seed), id)`. */
   def fold(seed: Long): Long = XXH64.hashLong(seed, 42L)

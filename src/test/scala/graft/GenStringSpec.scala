@@ -244,9 +244,43 @@ class GenStringSpec extends AnyFunSuite {
       assertSame(s"fallback $f", df, GenString.format(f, col("id")), format_string(f, col("id")))
   }
 
+  test("a template's node count covers its base values and alternatives") {
+    def nodes(t: String) = ColumnCompiler.estimateNodes(ColumnStrategy.Template(t))
+    assert(nodes("(ddd)-ddd-dddd") == 1)
+    assert(nodes("id\\V-dd") == 5) // two kernel stretches, one base value, the concat
+    assert(nodes("id\\V-dd|\\n") == 16) // plus the pick and two `when`s
+    val wide = DataGenPlan(Seq(TableSpec("t", 4, Seq(ColumnSpec("a", "array<string>",
+      ColumnStrategy.ArrayOf(ColumnSpec("e", "string", ColumnStrategy.Template("\\V|\\V|\\V|\\V")), 1000, 1000))))))
+    intercept[SpecError](Generator.generate(spark, wide))
+  }
+
+  test("arrays of 1000 pattern, uuid and template elements compile in whole-stage codegen") {
+    // one array per table: a table's columns share one whole-stage method
+    val shapes = Seq(
+      ColumnStrategy.Pattern("ln-{alpha:8}-{digit:4}") -> "ln-[A-Z]{8}-\\d{4}",
+      ColumnStrategy.Uuid -> "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}",
+      ColumnStrategy.Template("(ddd)-ddd-dddd") -> "\\(\\d{3}\\)-\\d{3}-\\d{4}")
+    val plan = DataGenPlan(shapes.zipWithIndex.map { case ((s, _), i) =>
+      TableSpec(s"t$i", 6, Seq(ColumnSpec("a", "array<string>",
+        ColumnStrategy.ArrayOf(ColumnSpec("e", "string", s), 1000, 1000))))
+    })
+    // no fallback: a method over 64 KB fails the query instead of running
+    // outside whole-stage codegen
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val dfs = Generator.generate(spark, plan)
+      for (((_, shape), i) <- shapes.zipWithIndex) {
+        val xs = dfs(s"t$i").collect().toSeq.map(_.getSeq[String](0))
+        assert(xs.length == 6 && xs.forall(_.size == 1000), s"t$i")
+        assert(xs.flatten.forall(x => x != null && x.matches(shape)), s"t$i: ${xs.head.take(3)}")
+        assert(xs.flatten.distinct.length > 1000, s"t$i")
+      }
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
   test("a lattice permutes its whole value space") {
     for (p <- Seq("{digit:3}", "A{alpha:2}-{hex:1}", "{digit:1}")) {
-      val lat = PatternCompiler.program(p, 99L, injective = true).alts.head.head
+      val lat = PatternCompiler.program(p, 99L, injective = true).toks.head
         .asInstanceOf[StringProgram.Lattice]
       val card = Planner.patternCardinality(p).get.toLong
       val image = (0L until card).map(lat.permute)
