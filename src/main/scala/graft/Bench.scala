@@ -219,7 +219,7 @@ object Bench {
     // synced write to the same tmp filesystem those queries use pins
     // the third axis (~50-150 ms per probe).
     lazy val diskBuf = new Array[Byte](4 << 20) // one 4 MB block, reused
-    /** Flush OUR dirty pages before a gate/endpoint disk probe: the
+    /** Flush OUR dirty pages before an endpoint disk probe: the
       * warmup passes write temp parquet, and a synced 32 MB probe issued
       * while the kernel is still writing those pages back measures
       * contention with OURSELVES — r13 measured 8 → 582 MB/s on the same
@@ -270,44 +270,8 @@ object Bench {
       val gbps = 24 * 2.0 / 32.0 / ((System.nanoTime() - t1) / 1e9)
       (mops, gbps)
     }
-    // Pre-flight clean gate — DEFAULT ON: wait (bounded) for a window
-    // where the box probe clears the clean-window bar before timing
-    // anything; a five-minute wait is cheaper than a contaminated
-    // artifact that misgrades every query. Override the bar with
-    // `SPARK_GRAFT_CLEAN_GATE=mops,gbps[,maxWaitSec]`, disable with
-    // `SPARK_GRAFT_CLEAN_GATE=off`. On timeout the run proceeds (and the
-    // recorded start probe shows what it ran on).
-    // Spec format: `mops,gbps[,maxWaitSec[,diskMbps]]` — the fourth field
-    // (r12) gates the disk axis; its default 150 MB/s synced-write bar is
-    // ~half the clean-box reading, the same margin policy as the other
-    // two axes.
-    val gateSpec = sys.env.getOrElse("SPARK_GRAFT_CLEAN_GATE", "270,9,300,150")
-    if (!gateSpec.trim.equalsIgnoreCase("off")) {
-      // A malformed spec must not abort the bench before any query runs —
-      // fall back to the FULL defaults (a partially-parseable spec like
-      // '300' must not silently mix a parsed mops with a default gbps).
-      val raw = gateSpec.split(",").flatMap(p => scala.util.Try(p.trim.toDouble).toOption)
-      val parts = if (raw.length >= 2) raw else Array.empty[Double]
-      if (raw.length < 2)
-        System.err.println(s"[bench] unparseable SPARK_GRAFT_CLEAN_GATE='$gateSpec' — using defaults 270,9,300,150")
-      val needMops = if (parts.length >= 1) parts(0) else 270.0
-      val needGbps = if (parts.length >= 2) parts(1) else 9.0
-      val maxWait = if (parts.length > 2) parts(2).toLong else 300L
-      val needDisk = if (parts.length > 3) parts(3) else 150.0
-      val deadline = System.nanoTime() + maxWait * 1000000000L
-      var ok = false
-      while (!ok && System.nanoTime() < deadline) {
-        drainOwnWriteback() // gate must see EXTERNAL load, not warmup residue
-        val (m, g) = calibrate()
-        val dk = quickDiskMbps()
-        ok = m >= needMops && g >= needGbps && dk >= needDisk
-        if (!ok) {
-          System.err.println(f"[bench] box busy (probe $m%.0f Mops, $g%.1f GB/s, $dk%.0f MB/s disk; need $needMops%.0f/$needGbps%.1f/$needDisk%.0f) — waiting")
-          Thread.sleep(15000)
-        }
-      }
-      if (!ok) System.err.println("[bench] clean-gate timeout — proceeding on a possibly-degraded box")
-    }
+    // No wait for a clean box: the start/end probes, the mid-run traces
+    // and the per-query steal/neighbor markers record what the run ran on.
     drainOwnWriteback()
     val (cpuMops0, memGbps0) = calibrate()
     val diskMbps0 = quickDiskMbps()

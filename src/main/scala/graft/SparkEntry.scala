@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import graft.queries.{ApiQueries, GenQueries, GeneratedOracles, LlmQueries, SpecOracles, TableQueries}
+import graft.queries.{ApiQueries, GenQueries, LlmQueries, SpecOracles, TableQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -10,10 +10,8 @@ import graft.queries.{ApiQueries, GenQueries, GeneratedOracles, LlmQueries, Spec
   * genuine recomputation for everything DuckDB can express
   * (TableQueries/LlmQueries.oracles) and handwritten spec-derived oracles
   * where the expected output is analytically computable from the column
-  * specs (SpecOracles). GeneratedOracles (pinned constants captured from an
-  * engine run) is EMPTY as of round 9 — it remains only as the safety net
-  * `graft.tools.OracleGen` would repopulate if a query ever shipped
-  * without a genuine oracle.
+  * specs (SpecOracles). No oracle is a constant captured from an engine
+  * run.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -27,5 +25,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    GeneratedOracles.map ++ SpecOracles.map ++ TableQueries.oracles ++ LlmQueries.oracles
+    SpecOracles.map ++ TableQueries.oracles ++ LlmQueries.oracles
 }

@@ -843,25 +843,31 @@ object Dedup {
     * sketch (undecodable payloads) pass unflagged. Batch-replayable. */
   def streamPHashGuard(stream: DataFrame,
       index: graft.functions.HammingIndexKernel.MihIndex,
-      phashCol: String, maxDistance: Int = 3): DataFrame = {
-    // Broadcast once here (r14 — ADVICE): the guard's plan is reused by
-    // EVERY micro-batch, so an embedded index would re-ship inside each
-    // micro-batch's task binary (~1.2 GB at the 50M-hash cap); the
-    // broadcast is fetched and cached once per executor for the life of
-    // the streaming query.
+      phashCol: String, maxDistance: Int = 3): DataFrame =
+    sketchGuard(stream, index, col(phashCol).cast("long"), maxDistance, "img_near_dup")
+
+  /** The stateless sketch-guard skeleton: `outCol` = some corpus sketch of
+    * `index` lies within `maxDistance` bits of the row's `sketch` (false
+    * for a null sketch). The index is broadcast once here (r14 — ADVICE):
+    * the guard's plan is reused by EVERY micro-batch, so an embedded index
+    * would re-ship inside each micro-batch's task binary (~1.2 GB at the
+    * 50M-hash cap); the broadcast is fetched and cached once per executor
+    * for the life of the streaming query. */
+  private def sketchGuard(stream: DataFrame,
+      index: graft.functions.HammingIndexKernel.MihIndex, sketch: Column,
+      maxDistance: Int, outCol: String): DataFrame = {
     val bc = stream.sparkSession.sparkContext.broadcast(index)
-    stream.withColumn("img_near_dup", coalesce(
-      graft.functions.HammingIndexKernel.anyWithin(
-        col(phashCol).cast("long"), bc, maxDistance), lit(false)))
+    stream.withColumn(outCol, coalesce(
+      graft.functions.HammingIndexKernel.anyWithin(sketch, bc, maxDistance),
+      lit(false)))
   }
 
   /** STATELESS streaming AUDIO near-dup guard against a static corpus
     * (r16 — the audio/video twin of [[streamPHashGuard]], closing the
     * modality gap): the in-flight clip's 64-bit spectral (or energy)
-    * sketch is computed per row by the streaming-safe
-    * [[Multimodal.mediaSketch64]] expression (bit-identical to the batch
-    * [[Multimodal.audioSpectralHashes]] / `audioHashes` sketches — the
-    * batch≡stream parity contract) and probed against the driver-known
+    * sketch is computed per row by the [[Multimodal.mediaSketch64]]
+    * expression (the same column [[Multimodal.audioSpectralHashes]] /
+    * `audioHashes` add) and probed against the driver-known
     * corpus index in one fused multi-index Hamming expression — complete
     * for any radius and EXACT-verified, so flags have no false
     * positives. Pure projection: no state store, no watermark, no
@@ -872,14 +878,10 @@ object Dedup {
   def streamAudioGuard(stream: DataFrame,
       index: graft.functions.HammingIndexKernel.MihIndex,
       binCol: String, maxDistance: Int = 3,
-      spectral: Boolean = true): DataFrame = {
-    val bc = stream.sparkSession.sparkContext.broadcast(index)
-    val sketch = Multimodal.mediaSketch64(col(binCol),
-      if (spectral) "audio_spectral" else "audio_energy")
-    stream.withColumn("audio_near_dup", coalesce(
-      graft.functions.HammingIndexKernel.anyWithin(sketch, bc, maxDistance),
-      lit(false)))
-  }
+      spectral: Boolean = true): DataFrame =
+    sketchGuard(stream, index, Multimodal.mediaSketch64(col(binCol),
+      if (spectral) "audio_spectral" else "audio_energy"), maxDistance,
+      "audio_near_dup")
 
   /** STATELESS streaming VIDEO near-dup guard — [[streamAudioGuard]]'s
     * video sibling over the re-mux-exact payload fingerprint
@@ -895,14 +897,10 @@ object Dedup {
   def streamVideoGuard(stream: DataFrame,
       index: graft.functions.HammingIndexKernel.MihIndex,
       binCol: String, maxDistance: Int = 4,
-      profile: Boolean = false): DataFrame = {
-    val bc = stream.sparkSession.sparkContext.broadcast(index)
-    val sketch = Multimodal.mediaSketch64(col(binCol),
-      if (profile) "video_profile" else "video_payload")
-    stream.withColumn("video_near_dup", coalesce(
-      graft.functions.HammingIndexKernel.anyWithin(sketch, bc, maxDistance),
-      lit(false)))
-  }
+      profile: Boolean = false): DataFrame =
+    sketchGuard(stream, index, Multimodal.mediaSketch64(col(binCol),
+      if (profile) "video_profile" else "video_payload"), maxDistance,
+      "video_near_dup")
 
   /** STATELESS streaming VERIFIED video RE-ENCODE guard (r17 — closes
     * the `streamVideoGuard(profile = true)` candidate-only gap): each
@@ -952,15 +950,10 @@ object Dedup {
   def streamMinHashGuard(stream: DataFrame, bandIndex: Array[Long],
       textCol: String, numHashes: Int = 128, bands: Int = 64,
       shingleWidth: Int = 3): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val toks = split(trim(lower(col(textCol))), "\\s+")
-    val sig = graft.functions.ShingleSketch.sketch(toks, shingleWidth, numHashes)
-      .getField("sig")
     // Auto form (r15): a corpus-scale band index past the 8 MB threshold
     // rides a broadcast handle instead of every micro-batch's task binary.
     val hits = graft.functions.SetKernels.countInSetAuto(stream.sparkSession,
-      lshBandKeys(sig, bands, rowsPerBand), bandIndex)
+      textBandKeys(textCol, numHashes, bands, shingleWidth), bandIndex)
     stream
       .withColumn("nd_bands_hit", coalesce(hits, lit(0L)))
       .withColumn("nd_candidate", col("nd_bands_hit") >= 1L)
@@ -1006,15 +999,10 @@ object Dedup {
   def streamMinHashGuardWith(stream: DataFrame,
       bloom: graft.functions.SetKernels.LongBloomSet, textCol: String,
       numHashes: Int = 128, bands: Int = 64, shingleWidth: Int = 3): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val toks = split(trim(lower(col(textCol))), "\\s+")
-    val sig = graft.functions.ShingleSketch.sketch(toks, shingleWidth, numHashes)
-      .getField("sig")
     // Auto form (r15): a guard bloom is ~750 MB at its 300M-key ceiling —
     // broadcast past the threshold rather than re-shipped per micro-batch.
     val hit = graft.functions.SetKernels.anyInBloomSetAuto(stream.sparkSession,
-      lshBandKeys(sig, bands, rowsPerBand), bloom)
+      textBandKeys(textCol, numHashes, bands, shingleWidth), bloom)
     stream.withColumn("nd_candidate", coalesce(hit, lit(false)))
   }
 
@@ -1047,11 +1035,6 @@ object Dedup {
   def streamNearDupVerdicts(stream: DataFrame, idCol: String, textCol: String,
       tsCol: String, delayThreshold: String, windowDuration: String,
       numHashes: Int = 128, bands: Int = 64, shingleWidth: Int = 3): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val rowsPerBand = numHashes / bands
-    val toks = split(trim(lower(col(textCol))), "\\s+")
-    val sig = graft.functions.ShingleSketch.sketch(toks, shingleWidth, numHashes)
-      .getField("sig")
     // The sentinel is keyed by (id, event time), so it is never claimed by
     // another document (64-bit collision odds are the same negligible ones
     // the band keys already accept) and survives the dedup even when the
@@ -1065,7 +1048,8 @@ object Dedup {
     val claimed = stream
       .where(col(textCol).isNotNull)
       .select(col(idCol).as("id"), col(tsCol).as("ts"),
-        posexplode(concat(lshBandKeys(sig, bands, rowsPerBand), array(selfKey))))
+        posexplode(concat(textBandKeys(textCol, numHashes, bands, shingleWidth),
+          array(selfKey))))
       .select(col("id"), col("ts"), col("col").as("bandkey"),
         (col("pos") === bands).as("is_self"))
       .withWatermark("ts", delayThreshold)
@@ -1075,6 +1059,18 @@ object Dedup {
       .agg(sum(when(col("is_self"), 0L).otherwise(1L)).as("n_claimed"))
       .select(col("window.start").as("window_start"), col("id"),
         col("n_claimed"), (col("n_claimed") === bands).as("kept"))
+  }
+
+  /** The banded-LSH keys of `textCol` behind the three stream guards:
+    * lower-cased whitespace tokens, their `shingleWidth`-shingle minhash
+    * signature of `numHashes` slots, cut into `bands` band keys. */
+  private def textBandKeys(textCol: String, numHashes: Int, bands: Int,
+      shingleWidth: Int): Column = {
+    require(numHashes % bands == 0, s"numHashes ($numHashes) must be divisible by bands ($bands)")
+    val toks = split(trim(lower(col(textCol))), "\\s+")
+    val sig = graft.functions.ShingleSketch.sketch(toks, shingleWidth, numHashes)
+      .getField("sig")
+    lshBandKeys(sig, bands, numHashes / bands)
   }
 
   // ------------------------------------------------------------- simhash

@@ -1,10 +1,12 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSql
 import org.apache.spark.sql.types._
@@ -13,8 +15,8 @@ import org.apache.spark.sql.types._
   * as opaque `binary` columns plus typed metadata structs.
   *
   * The Spark-side shape is binary columns, metadata extraction as codegen'd
-  * expressions, and batched per-partition decode with an explicit batch size
-  * (the Scala analog of an Arrow-vectorized decode UDF). Image decode is
+  * expressions, and every per-row media kernel (decode, resize, sketch)
+  * run by one Catalyst expression, [[MediaCodec]]. Image decode is
   * REAL: `decodeImages` parses PNG/JPEG/GIF/BMP pixels with the JDK's
   * built-in `javax.imageio` (no external codec dependency); undecodable
   * bytes yield a null struct. Audio/video feature extraction
@@ -76,29 +78,13 @@ object Multimodal extends org.apache.spark.internal.Logging {
     })
   }
 
-  /** Batched per-partition image decode — the Scala analog of a vectorized
-    * decode UDF. Rows stream through in `batchSize` groups (bounding
-    * decoder memory exactly like an Arrow batch would); output schema is
-    * the input plus a `decoded` struct. Decode is real pixel parsing via
-    * the JDK's `javax.imageio` (PNG/JPEG/GIF/BMP/WBMP); bytes that no
-    * registered reader accepts — or that throw mid-parse — decode to a
-    * null struct rather than failing the task.
-    */
-  def decodeImages(df: DataFrame, binCol: String, batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField("decoded", DecodedImageType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // ImageIO readers are pooled per call; grouping bounds the number of
-        // in-flight BufferedImages exactly like an Arrow batch would.
-        batch.map { row =>
-          val bytes = row.getAs[Array[Byte]](binIdx)
-          Row.fromSeq(row.toSeq :+ decodeOne(bytes))
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+  /** Image decode: the input plus a `decoded` struct ([[DecodedImageType]]).
+    * Decode is real pixel parsing via the JDK's `javax.imageio`
+    * (PNG/JPEG/GIF/BMP/WBMP); bytes that no registered reader accepts — or
+    * that throw mid-parse — decode to a null struct rather than failing
+    * the task. */
+  def decodeImages(df: DataFrame, binCol: String): DataFrame =
+    df.withColumn("decoded", mediaCodec(col(binCol), ImageDecode))
 
   /** ImageIO's default stream cache spills every read to a temp FILE; the
     * payloads are already in memory, so force the heap cache once per JVM. */
@@ -185,27 +171,16 @@ object Multimodal extends org.apache.spark.internal.Logging {
     StructField("duration_sec", DoubleType),
     StructField("mean_amplitude", DoubleType)))
 
-  /** Batched per-partition WAV/PCM decode — the audio sibling of
-    * `decodeImages`, same `mapPartitions` + batch shape. Parsing is the
-    * JDK's own `javax.sound.sampled` (RIFF/WAVE header + PCM frames, no
-    * external codec); bytes that aren't a parseable WAV — or that throw
-    * mid-read — decode to a null struct rather than failing the task.
+  /** WAV/PCM decode into `decoded_audio` — the audio sibling of
+    * `decodeImages`. Parsing is the JDK's own `javax.sound.sampled`
+    * (RIFF/WAVE header + PCM frames, no external codec); bytes that aren't
+    * a parseable WAV — or that throw mid-read — decode to a null struct
+    * rather than failing the task.
     * Compressed containers (MP3/OGG/AAC) have no JDK reader and correctly
     * yield null; they would slot in behind the same (binary -> struct)
     * signature. */
-  def decodeAudio(df: DataFrame, binCol: String, batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField("decoded_audio", DecodedAudioType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val bytes = row.getAs[Array[Byte]](binIdx)
-          Row.fromSeq(row.toSeq :+ decodeAudioOne(bytes))
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+  def decodeAudio(df: DataFrame, binCol: String): DataFrame =
+    df.withColumn("decoded_audio", mediaCodec(col(binCol), AudioDecode))
 
   /** Decode one WAV clip: header fields via `AudioSystem`'s format probe,
     * duration from the frame count, and — for 16-bit PCM — the mean
@@ -306,8 +281,8 @@ object Multimodal extends org.apache.spark.internal.Logging {
   }
 
   /** Resize planning: target dims preserving aspect ratio, as a column over
-    * the decoded struct (the codegen'd half of a resize; the pixel resample
-    * itself would ride the same `mapPartitions` shape as `decodeImages`). */
+    * the decoded struct (the planning half of a resize; [[resizeImages]]
+    * does the pixel resample). */
   def resizePlan(decoded: Column, maxSide: Int = 512): Column = {
     val w = decoded("width").cast(DoubleType)
     val h = decoded("height").cast(DoubleType)
@@ -319,30 +294,16 @@ object Multimodal extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------------- image resize
 
-  /** Batched per-partition image RESIZE — the execution half of
-    * [[resizePlan]], riding the same `mapPartitions` + batch shape as
-    * `decodeImages`. Each image is decoded with `javax.imageio`, resampled
-    * to `targetW x targetH` through a `Graphics2D` bilinear draw, and
-    * re-encoded (`format`, default PNG — lossless, so solid-color inputs
+  /** Image RESIZE — the execution half of [[resizePlan]]. Each image is
+    * decoded with `javax.imageio`, resampled to `targetW x targetH`
+    * through a `Graphics2D` bilinear draw, and re-encoded (`format`, default PNG — lossless, so solid-color inputs
     * have closed-form output pixels and stay oracle-checkable). Bytes no
     * reader accepts — or that throw mid-resample — yield a null `resized`
     * column rather than failing the task. */
   def resizeImages(df: DataFrame, binCol: String, targetW: Int, targetH: Int,
-      format: String = "png", batchSize: Int = 64,
-      resizedCol: String = "resized"): DataFrame = {
-    require(targetW > 0 && targetH > 0, s"bad target dims ${targetW}x$targetH")
-    val outSchema = StructType(df.schema.fields :+ StructField(resizedCol, BinaryType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val bytes = row.getAs[Array[Byte]](binIdx)
-          Row.fromSeq(row.toSeq :+ resizeOne(bytes, targetW, targetH, format))
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+      format: String = "png", resizedCol: String = "resized"): DataFrame =
+    df.withColumn(resizedCol,
+      mediaCodec(col(binCol), ImageResize(targetW, targetH, format)))
 
   private[graft] def resizeOne(bytes: Array[Byte], targetW: Int, targetH: Int,
       format: String): Array[Byte] = {
@@ -371,7 +332,7 @@ object Multimodal extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------------ perceptual hash
 
-  /** Batched per-partition perceptual hash (64-bit DCT pHash) — the image
+  /** Perceptual hash (64-bit DCT pHash) — the image
     * near-dup sketch: decode → 32×32 grayscale bilinear resample → 2D
     * DCT-II → 64 low-frequency AC coefficients (the top-left 8×8 block
     * minus DC, plus its (8,0) neighbor) → bit j = coefficient > median
@@ -382,22 +343,10 @@ object Multimodal extends org.apache.spark.internal.Logging {
     * within a few bits of Hamming distance; unrelated images differ in
     * ~32 — the standard image-dedup step of multimodal corpus pipelines
     * (composes with [[Dedup.nearDupHamming64]]'s pigeonhole blocking for
-    * the corpus-wide pair join). Same `mapPartitions` + batch shape as
-    * `decodeImages`; undecodable or degenerate bytes hash to null. */
-  def pHashImages(df: DataFrame, binCol: String, batchSize: Int = 64,
-      outCol: String = "phash"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(outCol, LongType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val bytes = row.getAs[Array[Byte]](binIdx)
-          Row.fromSeq(row.toSeq :+ pHashOne(bytes))
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+    * the corpus-wide pair join). Undecodable or degenerate bytes hash to
+    * null. */
+  def pHashImages(df: DataFrame, binCol: String, outCol: String = "phash"): DataFrame =
+    df.withColumn(outCol, mediaSketch64(col(binCol), "phash"))
 
   private val PHashSide = 32
   /** cosTable(u)(x) = cos((2x+1)·u·π/64) — the DCT-II basis, StrictMath
@@ -534,7 +483,7 @@ object Multimodal extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------------- audio hash
 
-  /** Batched per-partition audio fingerprint — the audio sibling of
+  /** Audio fingerprint — the audio sibling of
     * [[pHashImages]]: 16-bit PCM WAV → 64 equal time buckets → mean
     * absolute amplitude per bucket → bit j = bucket j > median. The
     * energy PROFILE is the signature, so the hash is invariant to
@@ -543,20 +492,8 @@ object Multimodal extends org.apache.spark.internal.Logging {
     * temporal structure differ in ~32 bits — composes with
     * [[Dedup.nearDupHamming64]] exactly like the image hash.
     * Non-PCM-16 or undecodable bytes hash to null. */
-  def audioHashes(df: DataFrame, binCol: String, batchSize: Int = 64,
-      outCol: String = "ahash"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(outCol, LongType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val bytes = row.getAs[Array[Byte]](binIdx)
-          Row.fromSeq(row.toSeq :+ audioHashOne(bytes))
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+  def audioHashes(df: DataFrame, binCol: String, outCol: String = "ahash"): DataFrame =
+    df.withColumn(outCol, mediaSketch64(col(binCol), "audio_energy"))
 
   /** 64-bit energy-profile hash of one clip, or null when the bytes are
     * not decodable 16-bit PCM with at least 64 samples. */
@@ -702,7 +639,7 @@ object Multimodal extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Batched per-partition TIME-SHIFT-ROBUST audio fingerprint — the
+  /** TIME-SHIFT-ROBUST audio fingerprint — the
     * spectral sibling of [[audioHashes]]: the energy-profile hash keys on
     * WHEN energy occurs, so a few hundred frames of leading silence or a
     * padded tail (the two most common real audio near-dup transforms)
@@ -718,20 +655,9 @@ object Multimodal extends org.apache.spark.internal.Logging {
     * [[Dedup.nearDupHamming64]] exactly like the image/energy hashes.
     * Non-PCM-16, undecodable, or shorter-than-one-window bytes hash to
     * null. Channels are mono-mixed before the transform. */
-  def audioSpectralHashes(df: DataFrame, binCol: String, batchSize: Int = 64,
-      outCol: String = "shash"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(outCol, LongType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val bytes = row.getAs[Array[Byte]](binIdx)
-          Row.fromSeq(row.toSeq :+ audioSpectralHashOne(bytes))
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+  def audioSpectralHashes(df: DataFrame, binCol: String,
+      outCol: String = "shash"): DataFrame =
+    df.withColumn(outCol, mediaSketch64(col(binCol), "audio_spectral"))
 
   /** 64-bit spectral-band hash of one clip, or null when the bytes are
     * not decodable 16-bit PCM with at least one full analysis window
@@ -916,27 +842,15 @@ object Multimodal extends org.apache.spark.internal.Logging {
     case _ => "other"
   }
 
-  /** Batched per-partition MP4 container parse — the video sibling of
-    * `decodeImages`/`decodeAudio`, same `mapPartitions` + batch shape.
-    * Walks the ISO BMFF box tree (size+fourcc framing; `moov` → `mvhd`
-    * timescale/duration, `trak` → `tkhd` 16.16 fixed-point dims from the
-    * first visually-sized track); pure JVM, no codec. Bytes that are not a
+  /** MP4 container parse into `decoded_video` — the video sibling of
+    * `decodeImages`/`decodeAudio`. Walks the ISO BMFF box tree
+    * (size+fourcc framing; `moov` → `mvhd` timescale/duration, `trak` →
+    * `tkhd` 16.16 fixed-point dims from the first visually-sized track); pure JVM, no codec. Bytes that are not a
     * parseable MP4 yield a null struct. Frame decode stays out of scope —
     * an ffmpeg-class demuxer would slot in behind the same
     * (binary -> struct) signature. */
-  def decodeVideoMeta(df: DataFrame, binCol: String, batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField("decoded_video", DecodedVideoType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val bytes = row.getAs[Array[Byte]](binIdx)
-          Row.fromSeq(row.toSeq :+ parseMp4Meta(bytes))
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+  def decodeVideoMeta(df: DataFrame, binCol: String): DataFrame =
+    df.withColumn("decoded_video", mediaCodec(col(binCol), Mp4MetaDecode))
 
   /** Parse one MP4: top-level `ftyp` (major brand) and `moov`, inside it
     * `mvhd` (v0/v1 timescale + duration) and each `trak`'s `tkhd` (track
@@ -1393,7 +1307,7 @@ object Multimodal extends org.apache.spark.internal.Logging {
     ftyp ++ moov
   }
 
-  /** Batched per-partition VIDEO near-dup fingerprint — the third leg of
+  /** VIDEO near-dup fingerprint — the third leg of
     * the modality triple (image pHash, audio energy/spectral, video).
     * Real frame decode needs a codec stack this container deliberately
     * lacks, so the certified invariance class is the one the container
@@ -1412,22 +1326,8 @@ object Multimodal extends org.apache.spark.internal.Logging {
     * (that upgrade slots a codec behind [[videoHashOne]]'s same
     * signature). Bytes that are not an MP4 with a complete, in-bounds
     * sample table hash to null. */
-  def videoHashes(df: DataFrame, binCol: String,
-      outCol: String = "vhash"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(outCol, LongType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    // No batch knob, unlike the image/audio codecs: those amortize a
-    // per-batch scratch decoder, but the MP4 walk is a pure in-place byte
-    // scan with nothing to reuse across rows (a grouped() here would be a
-    // no-op dressed as amortization — r14 ADVICE).
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        Row.fromSeq(row.toSeq :+ videoHashOne(bytes))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+  def videoHashes(df: DataFrame, binCol: String, outCol: String = "vhash"): DataFrame =
+    df.withColumn(outCol, mediaSketch64(col(binCol), "video_payload"))
 
   /** 64-bit frame-payload fingerprint of one MP4, or null unless the
     * first track carrying a COMPLETE sample-location table (per-sample
@@ -1604,7 +1504,7 @@ object Multimodal extends org.apache.spark.internal.Logging {
     } catch { case scala.util.control.NonFatal(_) => null }
   }
 
-  /** Batched per-partition RE-ENCODE-TOLERANT video signature — the
+  /** RE-ENCODE-TOLERANT video signature — the
     * coarse sibling of [[videoHashes]]. The payload hash certifies the
     * re-MUX class exactly but a re-ENCODE rewrites every coded byte and
     * defeats it; this signature never reads the payload at all. It hashes
@@ -1632,19 +1532,8 @@ object Multimodal extends org.apache.spark.internal.Logging {
     * hash to null: a flat profile carries no discriminating signal and
     * would otherwise pair every constant-bitrate file with every other. */
   def videoSizeProfileHashes(df: DataFrame, binCol: String,
-      outCol: String = "vphash"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(outCol, LongType))
-    val binIdx = df.schema.fieldIndex(binCol)
-    // Same no-batch-knob rationale as videoHashes: a pure byte scan has
-    // no per-batch scratch to amortize.
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        Row.fromSeq(row.toSeq :+ videoSizeProfileHashOne(bytes))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, outSchema)
-  }
+      outCol: String = "vphash"): DataFrame =
+    df.withColumn(outCol, mediaSketch64(col(binCol), "video_profile"))
 
   /** Video re-encode near-dup PAIRS — the candidates-then-verify
     * composition over the size profile, exactly the MinHash →
@@ -1712,30 +1601,10 @@ object Multimodal extends org.apache.spark.internal.Logging {
         graft.functions.HammingIndexKernel.DefaultIndexBudgetBytes,
       onIndexStats: (Int, Int, Int) => Unit = null,
       flatIndex: Boolean = false): DataFrame = {
-    val featSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("__vphash", LongType),
-      StructField("__vpranks", ArrayType(DoubleType)),
-      StructField("__vpr2", BinaryType),
-      StructField("__vpcell", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val binIdx = df.schema.fieldIndex(binCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { row =>
-        val parse = videoProfileParse(row.getAs[Array[Byte]](binIdx))
-        if (parse == null) Row(row.get(idIdx), null, null, null, null)
-        else {
-          val r2 = profileRank2Of(parse.medians)
-          Row(row.get(idIdx), profileBitsOf(parse.medians),
-            profileRanksOfR2(r2), r2,
-            profileCellOf(parse.durSec, parse.nSamples))
-        }
-      }
-    }
     // Materialized once (lazy, serialized — the Dedup.CandLevel decision):
     // read by the candidate stage and BOTH sides of the verify join;
     // without it the MP4 parse re-runs once per reference.
-    val feats = df.sparkSession.createDataFrame(rdd, featSchema)
+    val feats = videoProfileFeatures(df, idCol, binCol)
       .localCheckpoint(false, Dedup.CandLevel)
     val hashed = feats.where(col("__vphash").isNotNull)
     // Candidate-stage choice. The banded self-join's key space is only
@@ -1971,25 +1840,9 @@ object Multimodal extends org.apache.spark.internal.Logging {
         graft.functions.HammingIndexKernel.DefaultIndexBudgetBytes,
       flatIndex: Boolean = false)
       : graft.functions.HammingIndexKernel.MihCellIndex = {
-    val featSchema = StructType(Seq(
-      corpus.schema(idCol),
-      StructField("__vphash", LongType),
-      StructField("__vpr2", BinaryType),
-      StructField("__vpcell", LongType)))
-    val idIdx = corpus.schema.fieldIndex(idCol)
-    val binIdx = corpus.schema.fieldIndex(binCol)
-    val rdd = corpus.rdd.mapPartitions { rows =>
-      rows.map { row =>
-        val parse = videoProfileParse(row.getAs[Array[Byte]](binIdx))
-        if (parse == null) Row(row.get(idIdx), null, null, null)
-        else Row(row.get(idIdx), profileBitsOf(parse.medians),
-          profileRank2Of(parse.medians),
-          profileCellOf(parse.durSec, parse.nSamples))
-      }
-    }
     val cap = graft.functions.HammingIndexKernel.shardRowCap(maxIndexBytes,
       pieces = 4, hasIds = true, rankLen = ProfileBuckets, cellTables = 128)
-    val rows = corpus.sparkSession.createDataFrame(rdd, featSchema)
+    val rows = videoProfileFeatures(corpus, idCol, binCol)
       .where(col("__vphash").isNotNull)
       // try_cast, not cast: a malformed id should surface as THIS
       // contract's error (the null check below), not an ANSI cast throw
@@ -2523,15 +2376,14 @@ object Multimodal extends org.apache.spark.internal.Logging {
     header(chunkOffsets) ++ box("mdat", mdat)
   }
 
+  // ------------------------------------------------------ codec expression
+
   /** Sketch kinds [[mediaSketch64]] dispatches on — each is one of the
-    * batch pipeline's per-row 64-bit signature functions. */
+    * per-row 64-bit signature kernels. */
   private[graft] val Sketch64Kinds: Set[String] =
     Set("phash", "audio_energy", "audio_spectral", "video_payload", "video_profile")
 
-  /** Per-row dispatcher behind [[MediaSketch64]] — public-static so the
-    * generated code can call it. Same arithmetic as the batch
-    * `mapPartitions` forms, so batch and stream sketches are
-    * bit-identical. */
+  /** Per-row dispatcher behind the sketch codecs. */
   def sketch64Of(bytes: Array[Byte], kind: String): java.lang.Long = kind match {
     case "phash" => pHashOne(bytes)
     case "audio_energy" => audioHashOne(bytes)
@@ -2541,45 +2393,115 @@ object Multimodal extends org.apache.spark.internal.Logging {
     case other => throw new IllegalArgumentException(s"unknown sketch kind '$other'")
   }
 
-  /** STREAMING-SAFE 64-bit media sketch as a scalar Catalyst expression
-    * (r16): the batch sketch builders ([[pHashImages]],
-    * [[audioSpectralHashes]], [[videoHashes]], …) run through `df.rdd`
-    * `mapPartitions` — a shape Structured Streaming cannot execute — so
-    * the streaming near-dup guards need the SAME per-row signature as a
-    * pure projection. One expression per row, same static kernels as the
-    * batch path (bit-identical sketches, the batch≡stream parity
-    * contract), null on undecodable/degenerate bytes (which the guards
-    * then pass unflagged). Codec work per row is real (ImageIO /
-    * javax.sound decode for image/audio kinds; pure byte walks for
-    * video) — exactly the cost the batch path pays, paid inside the
-    * stream's projection instead. */
-  case class MediaSketch64(child: Expression, kind: String)
-      extends UnaryExpression {
+  /** The re-encode features of one MP4 ([[videoProfilePairs]],
+    * [[videoProfileIndex]]): signature bits, the zero-mean unit-norm rank
+    * vector, its doubled-rank bytes and the duration×fps cell key, all
+    * from one [[videoProfileParse]]. */
+  private[graft] val VideoProfileFeatureType: StructType = StructType(Seq(
+    StructField("bits", LongType),
+    StructField("ranks", ArrayType(DoubleType, containsNull = false)),
+    StructField("r2", BinaryType),
+    StructField("cell", LongType)))
+
+  /** One per-row media kernel and the Spark type of its result: applied
+    * to payload bytes it returns that result in Catalyst's internal form,
+    * or null when the bytes do not decode. [[MediaCodec]] runs any of
+    * them; the kind alone fixes the output type. */
+  sealed abstract class Codec(val name: String, val dataType: DataType)
+      extends (Array[Byte] => Any) with Product with Serializable {
+    override def toString: String = scala.runtime.ScalaRunTime._toString(this)
+  }
+
+  private[graft] final case class Sketch64(kind: String)
+      extends Codec(s"sketch64_$kind", LongType) {
     require(Sketch64Kinds.contains(kind),
       s"unknown sketch kind '$kind' (one of ${Sketch64Kinds.toSeq.sorted.mkString(", ")})")
-    override def prettyName: String = s"graft_media_sketch64_$kind"
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true // degenerate bytes sketch to null
+    def apply(bytes: Array[Byte]): Any = sketch64Of(bytes, kind)
+  }
+
+  /** A kernel that returns an external `Row`, converted for Catalyst. */
+  private[graft] sealed abstract class StructCodec(name: String, schema: StructType)
+      extends Codec(name, schema) {
+    protected def kernel(bytes: Array[Byte]): Row
+    @transient private lazy val toCatalyst =
+      CatalystTypeConverters.createToCatalystConverter(schema)
+    def apply(bytes: Array[Byte]): Any = {
+      val row = kernel(bytes)
+      if (row == null) null else toCatalyst(row)
+    }
+  }
+
+  private[graft] case object ImageDecode extends StructCodec("image_decode", DecodedImageType) {
+    protected def kernel(bytes: Array[Byte]): Row = decodeOne(bytes)
+  }
+  private[graft] case object AudioDecode extends StructCodec("audio_decode", DecodedAudioType) {
+    protected def kernel(bytes: Array[Byte]): Row = decodeAudioOne(bytes)
+  }
+  private[graft] case object Mp4MetaDecode extends StructCodec("mp4_meta", DecodedVideoType) {
+    protected def kernel(bytes: Array[Byte]): Row = parseMp4Meta(bytes)
+  }
+
+  private[graft] final case class ImageResize(targetW: Int, targetH: Int, format: String)
+      extends Codec("image_resize", BinaryType) {
+    require(targetW > 0 && targetH > 0, s"bad target dims ${targetW}x$targetH")
+    def apply(bytes: Array[Byte]): Any = resizeOne(bytes, targetW, targetH, format)
+  }
+
+  private[graft] case object VideoProfileFeatures
+      extends Codec("video_profile_features", VideoProfileFeatureType) {
+    def apply(bytes: Array[Byte]): Any = {
+      val p = videoProfileParse(bytes)
+      if (p == null) null
+      else {
+        val r2 = profileRank2Of(p.medians)
+        InternalRow(profileBitsOf(p.medians),
+          ArrayData.toArrayData(profileRanksOfR2(r2)), r2,
+          profileCellOf(p.durSec, p.nSamples))
+      }
+    }
+  }
+
+  /** Every per-row media kernel as one scalar Catalyst expression: binary
+    * payload in, the codec's type out, null for null or undecodable
+    * bytes. A pure projection, so the same column runs in batch plans and
+    * in Structured Streaming (the stream guards use it), inside
+    * whole-stage codegen.
+    *
+    * Declared non-deterministic to the optimizer, as
+    * `udf(...).asNondeterministic()` is, although the kernels are pure:
+    * a deterministic alias is copied by `PushPredicateThroughNonJoin` into
+    * any filter above it (`withColumn(h, codec).where(h.isNotNull)` would
+    * plan the codec twice and decode every surviving row twice), and
+    * `CollapseProject` may inline it into each consumer. Non-deterministic
+    * expressions are never duplicated, so each row runs its kernel once. */
+  case class MediaCodec(child: Expression, codec: Codec) extends UnaryExpression {
+    override def prettyName: String = s"graft_media_${codec.name}"
+    override def dataType: DataType = codec.dataType
+    override def nullable: Boolean = true // undecodable bytes -> null
+    override lazy val deterministic: Boolean = false
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case BinaryType => TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
         s"$prettyName expects binary, got ${other.simpleString}")
     }
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    override def eval(input: InternalRow): Any = {
       val b = child.eval(input)
-      if (b == null) null else sketch64Of(b.asInstanceOf[Array[Byte]], kind)
+      if (b == null) null else codec(b.asInstanceOf[Array[Byte]])
     }
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val codecRef = ctx.addReferenceObj("codec", codec, "scala.Function1")
       val childGen = child.genCode(ctx)
-      val boxed = ctx.freshName("sketchBoxed")
+      val res = ctx.freshName("codecResult")
       val code = code"""
         ${childGen.code}
         boolean ${ev.isNull} = true;
-        long ${ev.value} = -1L;
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
         if (!${childGen.isNull}) {
-          java.lang.Long $boxed =
-            graft.llm.Multimodal.sketch64Of(${childGen.value}, "$kind");
-          if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.longValue(); }
+          Object $res = $codecRef.apply(${childGen.value});
+          if ($res != null) {
+            ${ev.isNull} = false;
+            ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $res;
+          }
         }"""
       ev.copy(code = code)
     }
@@ -2587,9 +2509,21 @@ object Multimodal extends org.apache.spark.internal.Logging {
       copy(child = c)
   }
 
-  /** Column form of [[MediaSketch64]]. */
-  def mediaSketch64(bin: Column, kind: String): Column =
-    GraftSql.column(MediaSketch64(GraftSql.expression(bin), kind))
+  private def mediaCodec(bin: Column, codec: Codec): Column =
+    GraftSql.column(MediaCodec(GraftSql.expression(bin), codec))
+
+  /** One of the five 64-bit sketches ([[Sketch64Kinds]]) as a column. */
+  def mediaSketch64(bin: Column, kind: String): Column = mediaCodec(bin, Sketch64(kind))
+
+  /** `(idCol, __vphash, __vpranks, __vpr2, __vpcell)`: the
+    * [[VideoProfileFeatures]] of every row, all null for unprofiled bytes. */
+  private[graft] def videoProfileFeatures(df: DataFrame, idCol: String,
+      binCol: String): DataFrame = {
+    val f = col("__vp")
+    df.select(col(idCol), mediaCodec(col(binCol), VideoProfileFeatures).as("__vp"))
+      .select(col(idCol), f("bits").as("__vphash"), f("ranks").as("__vpranks"),
+        f("r2").as("__vpr2"), f("cell").as("__vpcell"))
+  }
 
   /** Per-row VERIFIED re-encode probe behind [[VideoProfileVerifiedBc]]
     * (r17) — public-static so generated code can call it. One container
@@ -2648,7 +2582,7 @@ object Multimodal extends org.apache.spark.internal.Logging {
         s"$prettyName expects binary, got ${other.simpleString}")
     }
     @transient private lazy val idx = bc.value
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    override def eval(input: InternalRow): Any = {
       val b = child.eval(input)
       if (b == null) null
       else profileVerifiedHitOf(b.asInstanceOf[Array[Byte]], idx,

@@ -284,7 +284,6 @@ object Pipeline extends org.apache.spark.internal.Logging {
       targetW: Int = 64,
       targetH: Int = 64,
       resizeFormat: String = "png",
-      batchSize: Int = 64,
       // "exact" | "cheap" | "off" (r18) — the [[Config.statsMode]] knob
       // for the image pipeline's (rows, bytes) stats.
       statsMode: String = "exact")
@@ -300,8 +299,8 @@ object Pipeline extends org.apache.spark.internal.Logging {
     * with a per-stage `(ord, stage, rows_out, bytes_out, wall_sec)`
     * survival stats frame (bytes: payload volume surviving — the number
     * a storage budget watches; the resize row reports the RESIZED
-    * volume). The decode/hash/resize stages ride the batched
-    * `mapPartitions` codec shape (zero shuffle); near-dup removal is the
+    * volume). The decode/hash/resize stages are one codec column each
+    * ([[Multimodal.MediaCodec]], zero shuffle); near-dup removal is the
     * fused multi-probe MIH expression ([[Dedup.dropNearDupsPHash]] —
     * zero shuffle, exact, complete for any radius) up to
     * `maxCorpusImages` distinct hashes, and AUTO-SWITCHES to the
@@ -353,22 +352,32 @@ object Pipeline extends org.apache.spark.internal.Logging {
         .foreach(_.unpersist(blocking = false))
     }
     measure("input", 0.0, binCol)
-    step("decode_phash")(df =>
-      Multimodal.pHashImages(df, binCol, cfg.batchSize)
-        .where(col("phash").isNotNull))
+    step("decode_phash")(df => decodeStage(df, binCol, "phash", "phash"))
     step("exact_dedup")(df => Dedup.exactKeepFirst(
       df.withColumn("__fp", xxhash64(col(binCol))), Seq("__fp"), idCol)
       .drop("__fp"))
     step("near_dedup")(df => Dedup.dropNearDupsPHash(df, idCol, "phash",
       cfg.maxDistance, cfg.pieces, cfg.maxCorpusImages))
-    step("resize", bytesCol = "resized")(df =>
-      Multimodal.resizeImages(df, binCol, cfg.targetW, cfg.targetH,
-        cfg.resizeFormat, cfg.batchSize)
-        .where(col("resized").isNotNull))
+    step("resize", bytesCol = "resized")(df => resizeStage(df, binCol, cfg))
     import spark.implicits._
     Result(cur,
       stats.toSeq.toDF("ord", "stage", "rows_out", "bytes_out", "wall_sec"))
   }
+
+  /** The sketch stage body of both media pipelines: the `kind` sketch
+    * ([[Multimodal.mediaSketch64]]) of `binCol` as `outCol`, undecodable
+    * payloads dropped. */
+  private[graft] def decodeStage(df: DataFrame, binCol: String, kind: String,
+      outCol: String): DataFrame =
+    df.withColumn(outCol, Multimodal.mediaSketch64(col(binCol), kind))
+      .where(col(outCol).isNotNull)
+
+  /** The resize stage body of both image pipelines: `resized` payloads at
+    * the config's shape, unresizable ones dropped. */
+  private[graft] def resizeStage(df: DataFrame, binCol: String,
+      cfg: ImageConfig): DataFrame =
+    Multimodal.resizeImages(df, binCol, cfg.targetW, cfg.targetH, cfg.resizeFormat)
+      .where(col("resized").isNotNull)
 
   // ------------------------------------------------ interleaved pipeline
 
@@ -481,9 +490,8 @@ object Pipeline extends org.apache.spark.internal.Logging {
     * text stage takes ALL its media slots along), then per modality:
     * explode → sketch (undecodable payloads dropped: image = real
     * decode + pHash; audio = spectral-band hash; video = payload
-    * fingerprint — the audio/video sketches run as the streaming-safe
-    * [[Multimodal.mediaSketch64]] expression, bit-identical to the batch
-    * kernels) → byte-exact dedup → sketch near-dup removal
+    * fingerprint — each one [[Multimodal.mediaSketch64]] column) →
+    * byte-exact dedup → sketch near-dup removal
     * ([[Dedup.dropNearDupsPHash]] — sketch-agnostic, zero-shuffle MIH up
     * to the corpus bound, banded join past it) → images additionally
     * resize → reassemble per-doc arrays in original slot order. Stats
@@ -777,31 +785,24 @@ object Pipeline extends org.apache.spark.internal.Logging {
       mod match {
         case "image" =>
           stepMedia("img_decode")(df =>
-            Multimodal.pHashImages(withMid(df), "__media", ic.batchSize)
-              .where(col("phash").isNotNull))
+            decodeStage(withMid(df), "__media", "phash", "phash"))
           stepMedia("img_exact_dedup")(df => Dedup.exactKeepFirst(
             df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
             .drop("__fp"))
           stepMedia("img_near_dedup")(df => Dedup.dropNearDupsPHash(df, "__mid",
             "phash", ic.maxDistance, ic.pieces, ic.maxCorpusImages))
-          stepMedia("img_resize")(df =>
-            Multimodal.resizeImages(df, "__media", ic.targetW, ic.targetH,
-              ic.resizeFormat, ic.batchSize).where(col("resized").isNotNull))
+          stepMedia("img_resize")(df => resizeStage(df, "__media", ic))
         case "audio" =>
-          stepMedia("aud_decode")(df => withMid(df)
-            .withColumn("ahash",
-              Multimodal.mediaSketch64(col("__media"), "audio_spectral"))
-            .where(col("ahash").isNotNull))
+          stepMedia("aud_decode")(df =>
+            decodeStage(withMid(df), "__media", "audio_spectral", "ahash"))
           stepMedia("aud_exact_dedup")(df => Dedup.exactKeepFirst(
             df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
             .drop("__fp"))
           stepMedia("aud_near_dedup")(df => Dedup.dropNearDupsPHash(df, "__mid",
             "ahash", audioCfg.maxDistance, audioCfg.pieces, audioCfg.maxCorpus))
         case _ =>
-          stepMedia("vid_decode")(df => withMid(df)
-            .withColumn("vhash",
-              Multimodal.mediaSketch64(col("__media"), "video_payload"))
-            .where(col("vhash").isNotNull))
+          stepMedia("vid_decode")(df =>
+            decodeStage(withMid(df), "__media", "video_payload", "vhash"))
           stepMedia("vid_exact_dedup")(df => Dedup.exactKeepFirst(
             df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
             .drop("__fp"))

@@ -8,8 +8,8 @@ import graft.spec._
 
 /** Driver-facing queries for the fluent `DataGenerator` API (FIXTURES.md §3
   * IOT spec), the standard dataset providers not covered by GenQueries, and
-  * the DataAnalyzer code generators. All deterministic — oracles are pinned
-  * constants from `graft.tools.OracleGen`; each query folds hard shape/
+  * the DataAnalyzer code generators. All deterministic — oracles are
+  * spec-derived constants in `SpecOracles`; each query folds hard shape/
   * bounds/cardinality invariants into BOOLEAN columns so regressions flip a
   * bool even before the pinned constants disagree.
   */

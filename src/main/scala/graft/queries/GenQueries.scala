@@ -12,8 +12,8 @@ import graft.spec._
   * (SURVEY.md §2.1-2.5). Generation is a pure function of
   * (seed, table, column, rowId) — fully deterministic and independent of
   * partitioning and of the sf directory — so each query returns a one-row
-  * (or small ordered) frame of aggregates whose oracle is a pinned constant
-  * (emitted by `graft.tools.OracleGen`). Each query also folds hard
+  * (or small ordered) frame of aggregates whose oracle is a spec-derived
+  * constant (`SpecOracles`). Each query also folds hard
   * invariants (bounds, lattice membership, regex shape, orphan counts) into
   * BOOLEAN columns: any behavioral regression flips a bool and fails the
   * driver's hash compare even before the pinned constants disagree.

@@ -105,7 +105,7 @@ object LlmQueries {
           }
           (id, bytes)
         }.toDF("doc_id", "payload")
-      val hashed = Multimodal.pHashImages(media, "payload", batchSize = 32)
+      val hashed = Multimodal.pHashImages(media, "payload")
       Dedup.nearDupHamming64(hashed, "doc_id", "phash",
           maxDistance = 10, pieces = 16)
         .select(col("id_a"), col("id_b"))
@@ -130,7 +130,7 @@ object LlmQueries {
       val corpus = s.range(0, 40).select(col("id")).as[Long]
         .map(f => (f, Multimodal.encodeBlockImage(f)))
         .toDF("family", "payload")
-      val hashed = Multimodal.pHashImages(corpus, "payload", batchSize = 32)
+      val hashed = Multimodal.pHashImages(corpus, "payload")
         .select(col("family"), col("phash"))
         .localCheckpoint()
       val index = Dedup.pHashIndex(hashed, "phash", pieces = 4)
@@ -184,7 +184,7 @@ object LlmQueries {
           (id, bytes)
         }.toDF("doc_id", "payload")
       val energyPairs = Dedup.nearDupHamming64(
-        Multimodal.audioHashes(media, "payload", batchSize = 32),
+        Multimodal.audioHashes(media, "payload"),
         "doc_id", "ahash", maxDistance = 3, pieces = 4)
       val tones = s.range(0, 100).select(col("id")).as[Long]
         .map { v =>
@@ -199,7 +199,7 @@ object LlmQueries {
           (200L + v, bytes)
         }.toDF("doc_id", "payload")
       val spectralPairs = Dedup.nearDupHamming64(
-        Multimodal.audioSpectralHashes(tones, "payload", batchSize = 32),
+        Multimodal.audioSpectralHashes(tones, "payload"),
         "doc_id", "shash", maxDistance = 3, pieces = 4)
       energyPairs.select(col("id_a"), col("id_b"))
         .unionByName(spectralPairs.select(col("id_a"), col("id_b")))
@@ -375,9 +375,8 @@ object LlmQueries {
 
     // Stateless streaming audio+video near-dup guards (r16): the image
     // guard's two missing modality twins. Each in-flight row's 64-bit
-    // sketch is computed by the streaming-safe mediaSketch64 expression
-    // (bit-identical to the batch mapPartitions sketches — the
-    // batch≡stream parity Round16Spec pins) and probed against the
+    // sketch is computed by the mediaSketch64 expression (the same
+    // column the batch sketch transforms add) and probed against the
     // driver-known corpus MIH index in one fused expression — complete
     // for the radius, exact-verified, zero shuffle, no state store.
     // Planted construction with a SQL-derivable answer. Audio (ids 4f+s
@@ -397,7 +396,7 @@ object LlmQueries {
         .map(f => (f, Multimodal.encodeToneWav(f)))
         .toDF("family", "payload")
       val audioIdx = Dedup.pHashIndex(
-        Multimodal.audioSpectralHashes(audioCorpus, "payload", batchSize = 32),
+        Multimodal.audioSpectralHashes(audioCorpus, "payload"),
         "shash", pieces = 4)
       val audioStream = s.range(0, 80).select(col("id")).as[Long]
         .map { id =>
@@ -1612,7 +1611,7 @@ object LlmQueries {
               if (id % 2 == 0) "bmp" else "png")
           (id, bytes)
         }.toDF("doc_id", "payload")
-      val decoded = Multimodal.decodeImages(media, "payload", batchSize = 32)
+      val decoded = Multimodal.decodeImages(media, "payload")
         .withColumn("target", Multimodal.resizePlan(col("decoded")))
       one(decoded,
         "n" -> count(lit(1)),
@@ -1648,7 +1647,7 @@ object LlmQueries {
               amplitude = ((id % 1000) + 1).toShort)
           (id, bytes)
         }.toDF("doc_id", "payload")
-      val decoded = Multimodal.decodeAudio(media, "payload", batchSize = 32)
+      val decoded = Multimodal.decodeAudio(media, "payload")
       val a = col("decoded_audio")
       one(decoded.withColumn("media_meta", Multimodal.mediaMeta(col("payload"))),
         "n" -> count(lit(1)),
@@ -1731,7 +1730,7 @@ object LlmQueries {
             }
           (id, bytes)
         }.toDF("doc_id", "payload")
-      val decoded = Multimodal.decodeVideoMeta(media, "payload", batchSize = 32)
+      val decoded = Multimodal.decodeVideoMeta(media, "payload")
       val v = col("decoded_video")
       val plantedFrames = lit(3L) + col("doc_id") % 5
       val plantedMean = (lit(500L) + (col("doc_id") % 11) * 16).cast("double") +
@@ -1794,9 +1793,8 @@ object LlmQueries {
               gray = (id % 256).toInt)
           (id, bytes)
         }.toDF("doc_id", "payload")
-      val resized = Multimodal.resizeImages(media, "payload",
-        targetW = 6, targetH = 4, batchSize = 32)
-      val decoded = Multimodal.decodeImages(resized, "resized", batchSize = 32)
+      val resized = Multimodal.resizeImages(media, "payload", targetW = 6, targetH = 4)
+      val decoded = Multimodal.decodeImages(resized, "resized")
       val r = col("decoded")
       one(decoded.withColumn("out_meta", Multimodal.mediaMeta(col("resized"))),
         "n" -> count(lit(1)),
@@ -3412,7 +3410,7 @@ object LlmQueries {
       |  JOIN sizes sb ON sb.doc_id = id_b)""".stripMargin
 
   /** Genuine DuckDB oracles (every former pinned-constant oracle in this
-    * family is now a replay — see GeneratedOracles for the residue). */
+    * family is now a replay). */
   val oracles: Map[String, String] = Map(
     // GENUINE replay of the temperature-weight arithmetic: per-source
     // sizes from the table, w_i = budget * (n_i^alpha / Z) / n_i at

@@ -2,8 +2,8 @@ package graft.queries
 
 /** Handwritten, spec-derived oracles for generator queries — each value
   * below is computed BY HAND from the query's column specs, not captured
-  * from an engine run (unlike [[GeneratedOracles]], which pins whatever the
-  * engine produced and therefore self-certifies engine semantics). If the
+  * from an engine run (a captured constant would pin whatever the engine
+  * produced and therefore self-certify engine semantics). If the
   * engine drifts from the documented semantics, these rows disagree and the
   * driver's DuckDB compare fails.
   *

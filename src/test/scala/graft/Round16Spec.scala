@@ -456,7 +456,14 @@ class Round16Spec extends AnyFunSuite {
 
   // ------------------------------- streaming AV guards: batch ≡ stream
 
-  test("mediaSketch64 expression: bit-identical to the batch mapPartitions sketches") {
+  test("mediaSketch64 expression: bit-identical to the per-row sketch kernels") {
+    // The reference is the kernel called directly on the collected bytes.
+    def sameAsKernel(df: org.apache.spark.sql.DataFrame, sketch: String,
+        kernel: Array[Byte] => java.lang.Long): Boolean =
+      df.select(col("payload"), col(sketch)).collect().forall { r =>
+        val want = kernel(r.getAs[Array[Byte]](0))
+        if (want == null) r.isNullAt(1) else !r.isNullAt(1) && r.getLong(1) == want.longValue
+      }
     val audio = spark.range(0, 12).select(col("id")).as[Long]
       .map { id =>
         val bytes =
@@ -464,11 +471,11 @@ class Round16Spec extends AnyFunSuite {
           else graft.llm.Multimodal.encodeToneWav(id / 2)
         (id, bytes)
       }.toDF("id", "payload")
-    val batchA = graft.llm.Multimodal.audioSpectralHashes(audio, "payload", batchSize = 4)
-      .select(col("id"), col("shash"))
-    val exprA = audio.select(col("id"),
+    val exprA = audio.select(col("payload"),
       graft.llm.Multimodal.mediaSketch64(col("payload"), "audio_spectral").as("shash"))
-    assert(batchA.exceptAll(exprA).isEmpty && exprA.exceptAll(batchA).isEmpty)
+    assert(sameAsKernel(exprA, "shash", graft.llm.Multimodal.audioSpectralHashOne))
+    assert(sameAsKernel(graft.llm.Multimodal.audioSpectralHashes(audio, "payload"), "shash",
+      graft.llm.Multimodal.audioSpectralHashOne))
 
     val sizes = (0 until 24).map(i => 32 + (i * 7) % 40)
     val video = spark.range(0, 12).select(col("id")).as[Long]
@@ -478,10 +485,11 @@ class Round16Spec extends AnyFunSuite {
           else graft.llm.Multimodal.encodeMp4Media(id / 2, sizes, Seq.fill(6)(4))
         (id, bytes)
       }.toDF("id", "payload")
-    val batchV = graft.llm.Multimodal.videoHashes(video, "payload").select(col("id"), col("vhash"))
-    val exprV = video.select(col("id"),
+    val exprV = video.select(col("payload"),
       graft.llm.Multimodal.mediaSketch64(col("payload"), "video_payload").as("vhash"))
-    assert(batchV.exceptAll(exprV).isEmpty && exprV.exceptAll(batchV).isEmpty)
+    assert(sameAsKernel(exprV, "vhash", graft.llm.Multimodal.videoHashOne))
+    assert(sameAsKernel(graft.llm.Multimodal.videoHashes(video, "payload"), "vhash",
+      graft.llm.Multimodal.videoHashOne))
   }
 
   test("streamAudioGuard / streamVideoGuard: batch and MemoryStream verdicts are identical") {
@@ -494,7 +502,7 @@ class Round16Spec extends AnyFunSuite {
     val audioCorpus = spark.range(0, 6).select(col("id")).as[Long]
       .map(f => (f, graft.llm.Multimodal.encodeToneWav(f))).toDF("family", "payload")
     val audioIdx = D.pHashIndex(
-      graft.llm.Multimodal.audioSpectralHashes(audioCorpus, "payload", batchSize = 4), "shash",
+      graft.llm.Multimodal.audioSpectralHashes(audioCorpus, "payload"), "shash",
       pieces = 4)
     val audioRows = (0 until 24).map { i =>
       val fam = (i / 4).toLong

@@ -49,7 +49,7 @@ class Round7Spec extends AnyFunSuite {
           (id % 251).toInt, if (id % 2 == 0) "bmp" else "png")
       (id, bytes)
     }.toDF("doc_id", "payload")
-    val out = Multimodal.decodeImages(media, "payload", batchSize = 7)
+    val out = Multimodal.decodeImages(media, "payload")
     assert(out.schema.fieldNames.last == "decoded")
     val rows = out.select(col("doc_id"), col("decoded.width"), col("decoded.height"),
       col("decoded.channels"), col("decoded.mean_intensity")).collect()
