@@ -49,20 +49,14 @@ object Dedup {
     * chunks instead; the frame is read exactly twice, sequentially, so
     * the deserialize-on-read cost is two cheap streaming passes. */
   /** Storage level for the candidate-mass checkpoints (banded frame,
-    * candidate pairs, verify shingles): serialized by default — the 100M-doc
-    * GC-ceiling decision (r14, scaladoc below). The system property
-    * `graft.dedup.deserializedCheckpoints=true` flips them to plain
-    * MEMORY_AND_DISK: the measurement lever behind the r14→r15
-    * `q_dedup_minhash_cc` investigation (BENCH_NOTES r15) — at bench scale
-    * the ser/deser CPU is visible while heap never was the constraint. */
-  private[llm] val CandLevel: org.apache.spark.storage.StorageLevel =
-    if (java.lang.Boolean.getBoolean("graft.dedup.deserializedCheckpoints"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    * candidate pairs, verify shingles): serialized — the 100M-doc
+    * GC-ceiling decision (r14, scaladoc below; BENCH_NOTES r15 measured
+    * the deserialized level at bench scale and kept this one). */
+  private[llm] val CandLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   private def capBuckets(df: DataFrame, keyCol: String, maxBucket: Long,
       onDrops: (Long, Long) => Unit = null): DataFrame = {
-    val mat = df.localCheckpoint(false, CandLevel)
+    val mat = StageCheckpoints.local(df, eager = false, CandLevel)
     val oversized = mat.groupBy(keyCol).agg(count(lit(1)).as("__bsize"))
       .where(col("__bsize") > maxBucket)
     // Drop accounting (r14): recall loss from capped buckets must be
@@ -286,14 +280,14 @@ object Dedup {
     // onCapDrops (r14) surfaces what the bucket cap discarded — capped
     // buckets are the one silent-recall-loss knob in this pipeline.
     val bucketed = capBuckets(banded, "bandkey", maxBucket, onCapDrops)
-    val candidates = bucketed.select(col("bandkey"), col("id").as("id_a"))
-      .join(bucketed.select(col("bandkey"), col("id").as("id_b")), Seq("bandkey"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-      // Serialized like the banded frame: pair lists on dirty corpora are
-      // candidate-mass-sized (rows·bands·maxBucket worst case).
-      .localCheckpoint(false, CandLevel)
+    // Serialized like the banded frame: pair lists on dirty corpora are
+    // candidate-mass-sized (rows·bands·maxBucket worst case).
+    val candidates = StageCheckpoints.local(
+      bucketed.select(col("bandkey"), col("id").as("id_a"))
+        .join(bucketed.select(col("bandkey"), col("id").as("id_b")), Seq("bandkey"))
+        .where(col("id_a") < col("id_b"))
+        .select("id_a", "id_b")
+        .distinct(), eager = false, CandLevel)
 
     // Verify only the documents that appear in some candidate pair. The
     // candidate-id semi-join prunes the RAW corpus BELOW the shingle
@@ -314,10 +308,9 @@ object Dedup {
     // document is a candidate.
     val ids = candidates.select(col("id_a").as(idCol))
       .unionByName(candidates.select(col("id_b").as(idCol))).distinct()
-    val sets = shingleSets(
+    val sets = StageCheckpoints.local(shingleSets(
       Similarity.parallelize(df).join(ids, Seq(idCol), "left_semi"), idCol, textCol,
-      shingleWidth, spread = false)
-      .localCheckpoint(false, CandLevel)
+      shingleWidth, spread = false), eager = false, CandLevel)
     // Both `sh` arrays are sorted and distinct (the sketch's contract), so
     // the jaccard is one merge walk instead of two hash-set builds.
     candidates
@@ -389,11 +382,10 @@ object Dedup {
       maxIter: Int = 25, localEdgeThreshold: Long = 1000000L): DataFrame = {
     import graft.tools.StageLog
     var edges = StageLog.timed("cc_edge_checkpoint") {
-      pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+      StageCheckpoints.local(pairs.select(col(aCol).as("u"), col(bCol).as("v"))
         .where(col("u") =!= col("v"))
         .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct(), eager = true)
     }
 
     val integralIds = edges.schema.fields
@@ -449,12 +441,12 @@ object Dedup {
       val oriented = large.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       val sMin = oriented.groupBy("u").agg(min(col("v")).as("m"))
-      val small = oriented.join(sMin, Seq("u"))
+      val small = StageCheckpoints.local(oriented.join(sMin, Seq("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(sMin.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v")).distinct()
-        .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .localCheckpoint(true)
+        .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v")),
+        eager = true)
 
       val fp2 = fingerprint(small)
       converged = fp2 == fp
@@ -801,11 +793,10 @@ object Dedup {
       val nShards = math.max(2L,
         ((est * 1.06) / (maxCorpusImages * 0.9)).ceil.toLong).toInt
       val shardOf = pmod(xxhash64(col("__h")), lit(nShards.toLong))
-      var acc = df.select(col(idCol).cast("long").as("__id"), h.as("__h"))
-        .withColumn("__min", lit(Long.MaxValue))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        // slim (id, hash) frame: passes never re-decode
+      // slim (id, hash) frame: passes never re-decode
+      var acc = StageCheckpoints.local(
+        df.select(col(idCol).cast("long").as("__id"), h.as("__h"))
+          .withColumn("__min", lit(Long.MaxValue)), eager = true, CandLevel)
       (0 until nShards).foreach { s =>
         // Per-pass broadcast: executors fetch this shard's index once;
         // the eager localCheckpoint below materializes the pass, after
@@ -815,11 +806,9 @@ object Dedup {
           pHashIdIndex(acc.where(col("__h").isNotNull &&
             shardOf === s.toLong), "__id", "__h", pieces, maxCorpusImages))
         val prev = acc
-        acc = acc.withColumn("__min", least(col("__min"),
+        acc = StageCheckpoints.local(acc.withColumn("__min", least(col("__min"),
             coalesce(K.minIdWithin(col("__h"), bc, maxDistance),
-              lit(Long.MaxValue))))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+              lit(Long.MaxValue)))), eager = true, CandLevel)
         // retire this shard's index reference state
         bc.unpersist(blocking = false)
         org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)

@@ -1604,8 +1604,8 @@ object Multimodal extends org.apache.spark.internal.Logging {
     // Materialized once (lazy, serialized — the Dedup.CandLevel decision):
     // read by the candidate stage and BOTH sides of the verify join;
     // without it the MP4 parse re-runs once per reference.
-    val feats = videoProfileFeatures(df, idCol, binCol)
-      .localCheckpoint(false, Dedup.CandLevel)
+    val feats = StageCheckpoints.local(videoProfileFeatures(df, idCol, binCol),
+      eager = false, Dedup.CandLevel)
     val hashed = feats.where(col("__vphash").isNotNull)
     // Candidate-stage choice. The banded self-join's key space is only
     // pieces · 2^(64/pieces) values (256 at the default 4-bit slices —
@@ -1759,7 +1759,7 @@ object Multimodal extends org.apache.spark.internal.Logging {
                   .as("__hit"))
             // Peak reference state = ONE index: materialize the pass,
             // then free this group's executor copies before the next builds.
-            val mat = pass.localCheckpoint(true, Dedup.CandLevel)
+            val mat = StageCheckpoints.local(pass, eager = true, Dedup.CandLevel)
             bc.unpersist(blocking = false)
             pairs = if (pairs == null) mat else pairs.unionByName(mat)
           }

@@ -1,7 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end C4/RefinedWeb-style curation: the pipeline a real
   * training-data job runs, composed from the library's own stages in
@@ -24,12 +25,12 @@ import org.apache.spark.sql.functions._
   * zero-shuffle kernels; the filters are stateless projections; the only
   * wide operations are the ones dedup inherently needs (content-hash
   * shuffle, banded-minhash candidate join, gram-key join). Each stage
-  * output is localCheckpoint-ed once and read once, by the next stage;
-  * intermediate checkpoints are unpersisted as soon as the next stage
-  * materializes. Under the default `statsMode = "cheap"` a stage's
-  * count+token-sum rides its checkpoint's own materialize job as
-  * `observe` metrics, so stats add no job and no second read; `exact`
-  * adds one aggregate job per stage over the checkpoint.
+  * output is localCheckpoint-ed once and read once, by the next stage.
+  * One stage runner serves all three pipelines: a stage's count and
+  * token (or byte, or slot) sums ride its checkpoint's own materialize
+  * job as `observe` metrics, so stats add no job and no second read; once
+  * that checkpoint is materialized the previous one and every checkpoint
+  * the stage's operators created ([[StageCheckpoints]]) are unpersisted.
   *
   * Near-dup banding (r14): `bands = 0` (the default) derives
   * `(bands, rowsPerBand)` from [[Dedup.lshParamsSelective]] — the most
@@ -47,51 +48,111 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline extends org.apache.spark.internal.Logging {
 
-  // Stage checkpoints are corpus-sized and read by the next stage (and,
-  // under `exact` stats, by one aggregate); serialized block storage keeps
-  // them as byte chunks instead of hundreds of millions of row objects
-  // (the 100M-doc GC ceiling — BENCH_NOTES r14), at the cost of a cheap
-  // streaming deserialize per read.
-  private val CkptSer = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-
-  /** Stats modes (r18 — VERDICT r17 #1: the per-stage count jobs were the
-    * flagship pipelines' largest overhead, ~24% of wall at 3M docs):
-    *  - `exact`: dedicated aggregate jobs over each stage's checkpoint
-    *    (the r17 behavior);
-    *  - `cheap`: the SAME values collected as `observe` metrics riding the
-    *    checkpoint's own materialize job — zero extra jobs, values
-    *    identical by construction (the metrics aggregate over exactly the
-    *    rows the checkpoint materializes);
-    *  - `off`: no counting at all — stats rows carry -1 for the count
-    *    columns (wall_sec and capped_rows stay real).
-    * [[Config]] defaults to `cheap`: Round18Spec pins its rows equal to
-    * `exact`'s, and it saves the aggregate job (and the second read of
-    * the checkpoint) of every stage. `exact` stays for callers that want
-    * the counts from a plain aggregate; the image and interleaved configs
-    * still default to it. */
-  private val StatsModes = Set("exact", "cheap", "off")
+  // Stage checkpoints are corpus-sized and read by the next stage;
+  // serialized block storage keeps them as byte chunks instead of hundreds
+  // of millions of row objects (the 100M-doc GC ceiling — BENCH_NOTES
+  // r14), at the cost of a cheap streaming deserialize per read.
+  private val CkptSer = StorageLevel.MEMORY_AND_DISK_SER
 
   /** Bounded wait for an observation attached to an ALREADY-MATERIALIZED
     * frame (the eager checkpoint returned, so the execution-end event is
     * posted; the listener normally fires within milliseconds). None after
     * the bound — callers fall back to an exact aggregate, trading the
     * saved job back for correctness. */
-  private def awaitObs(obs: Observation): Option[Row] = {
-    var r = org.apache.spark.sql.graftshim.GraftSql.observedRow(obs)
-    var waitedMs = 0L
-    while (r.isEmpty && waitedMs < 10000L) {
-      Thread.sleep(20L)
-      waitedMs += 20L
-      r = org.apache.spark.sql.graftshim.GraftSql.observedRow(obs)
-    }
+  private[graft] def awaitObs(obs: Observation): Option[Row] = {
+    val r = scala.util.Try(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(10L, "s"))).toOption
     if (r.isEmpty)
-      logWarning(s"observation ${obs.name} did not arrive within ${waitedMs}ms; " +
+      logWarning(s"observation ${obs.name} did not arrive within 10000ms; " +
         "counting the stage with an exact aggregate instead")
-    else if (waitedMs > 100L)
-      logInfo(s"observation ${obs.name} took ${waitedMs}ms to arrive")
     r
   }
 
+  /** `df` checkpointed eagerly at `level`, with `aggs` (named aggregates)
+    * observed on the job that materialized it. */
+  private[graft] def observedCheckpoint(df: DataFrame, aggs: Seq[Column],
+      level: StorageLevel): (DataFrame, Observation) = {
+    val obs = Observation()
+    (df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint(true, level), obs)
+  }
+
+  /** The fallback for a missing observation: `aggs` over the checkpoint. */
+  private[graft] def aggregate(ckpt: DataFrame, aggs: Seq[Column]): Row =
+    ckpt.agg(aggs.head, aggs.tail: _*).collect()(0)
+
+  // The stats aggregates each pipeline observes on its checkpoints.
+  private[graft] def textAggs(textCol: String): Seq[Column] = Seq(count(lit(1)).as("n"),
+    coalesce(sum(TextAnalysis.tokenCount(col(textCol)).cast("long")), lit(0L)).as("tok"))
+  private[graft] def byteAggs(binCol: String): Seq[Column] = Seq(count(lit(1)).as("n"),
+    coalesce(sum(length(col(binCol)).cast("long")), lit(0L)).as("bytes"))
+  /** Documents and the sum of each `slotCols` column (media slots). */
+  private[graft] def slotAggs(slotCols: Seq[String]): Seq[Column] =
+    count(lit(1)).as("n") +: slotCols.map(c =>
+      coalesce(sum(col(c).cast("long")), lit(0L)).as(s"s_$c"))
+  /** Exploded media slots and the largest slot index. */
+  private[graft] val explodeAggs: Seq[Column] =
+    Seq(count(lit(1)).as("n"), coalesce(max(col("__idx")), lit(0)).as("mx"))
+
+  /** A frame a pipeline advances stage by stage: its current eager
+    * checkpoint and the row of `aggs` observed when it materialized. */
+  private final class Track(first: DataFrame, var aggs: Seq[Column],
+      level: StorageLevel) {
+    var df: DataFrame = _
+    private var obs: Observation = _
+    private var row: Row = _
+    advance(first)
+    def advance(next: DataFrame): Unit = {
+      val (c, o) = observedCheckpoint(next, aggs, level)
+      df = c
+      obs = o
+      row = null
+    }
+    /** Read once, after the stage's wall is taken: the observed row, or the
+      * aggregate over the checkpoint when the observation does not arrive. */
+    def agg: Row = {
+      if (row == null) row = awaitObs(obs).getOrElse(aggregate(df, aggs))
+      row
+    }
+  }
+
+  private def retire(ckpt: DataFrame): Unit =
+    org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(ckpt)
+      .foreach(_.unpersist(blocking = false))
+
+  private def seconds(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+  /** The stage runner of all three pipelines and their stats rows
+    * `(ord, stage, <count>, <sum>, wall_sec, capped_rows)`. */
+  private final class Runner {
+    private val rows = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Double, Long)]()
+    /** Rows the near-dup bucket cap dropped in the running stage. */
+    var capped = 0L
+
+    def record(stage: String, wallSec: Double, counts: (Long, Long)): Unit = {
+      rows += ((rows.size, stage, counts._1, counts._2, wallSec, capped))
+      capped = 0L
+    }
+
+    /** Runs `body` over `t`'s checkpoint, advances `t` to its output and
+      * records `counts`. Then `t`'s previous checkpoint and the checkpoints
+      * the body's operators created free their blocks — holding them to
+      * the end would stack every stage's corpus in executor storage at
+      * once (~9x the working set at the benched sizes). */
+    def step(stage: String, t: Track, counts: => (Long, Long))(
+        body: DataFrame => DataFrame): Unit = {
+      val t0 = System.nanoTime()
+      val prev = t.df
+      val (next, owned) = StageCheckpoints.owned(body(prev))
+      t.advance(next)
+      record(stage, seconds(t0), counts)
+      (prev +: owned).foreach(retire)
+    }
+
+    def stats(spark: SparkSession, countCol: String, sumCol: String): DataFrame = {
+      import spark.implicits._
+      rows.toSeq.toDF("ord", "stage", countCol, sumCol, "wall_sec", "capped_rows")
+    }
+  }
 
   final case class Config(
       keepLangs: Set[String] = Set("en"),
@@ -137,12 +198,7 @@ object Pipeline extends org.apache.spark.internal.Logging {
       // twin of [[TextAnalysis.redactPii]] (masking keeps the doc;
       // density-heavy docs — dumps, directories, logs — are usually
       // better dropped than turned into placeholder soup).
-      piiMaxDensity: Option[Double] = None,
-      // Stats collection mode (r18): "exact" | "cheap" | "off" — see the
-      // [[Pipeline.StatsModes]] note. `cheap` (the default) emits
-      // IDENTICAL values with zero extra jobs (observe metrics on the
-      // checkpoint's own materialize); `off` emits -1 counts.
-      statsMode: String = "cheap")
+      piiMaxDensity: Option[Double] = None)
 
   /** The quality_filter stage: one keep-rule node, so the quality kernel
     * runs once per document (see [[TextAnalysis.qualityKeep]]). */
@@ -155,124 +211,79 @@ object Pipeline extends org.apache.spark.internal.Logging {
   def curate(docs: DataFrame, idCol: String, textCol: String,
       evalDocs: Option[DataFrame] = None,
       cfg: Config = Config()): Result = {
-    val spark = docs.sparkSession
+    val run = new Runner
+    val chain = textStages(cfg, idCol, textCol, evalDocs, run)
+    val cur = new Track(docs.where(col(textCol).isNotNull), textAggs(textCol), CkptSer)
+    def counts = (cur.agg.getLong(0), cur.agg.getLong(1))
+    run.record("input", 0.0, counts)
+    chain.foreach { case (stage, body) => run.step(stage, cur, counts)(body) }
+    Result(cur.df, run.stats(docs.sparkSession, "rows_out", "tokens_out"))
+  }
+
+  /** The text chain [[curate]] and [[curateInterleavedMm]] both run, in
+    * order, optional stages only when configured; the near-dup stage
+    * reports its capped rows to `run`. */
+  private def textStages(cfg: Config, idCol: String, textCol: String,
+      evalDocs: Option[DataFrame], run: Runner): Seq[(String, DataFrame => DataFrame)] = {
     require(cfg.minTokens >= 0 && cfg.budgetTokens >= 0L, s"bad config $cfg")
     require(cfg.bands >= 0, s"bad bands ${cfg.bands} (0 = auto)")
-    require(StatsModes(cfg.statsMode),
-      s"statsMode must be one of ${StatsModes.mkString("/")}, got '${cfg.statsMode}'")
+    require(cfg.dsirTarget.isEmpty || cfg.dsirN > 0,
+      s"dsirTarget is set but dsirN=${cfg.dsirN} — the DSIR stage needs a " +
+        "positive selection size")
     val bands =
       if (cfg.bands > 0) cfg.bands
       else Dedup.lshParamsSelective(cfg.nearDupThreshold, cfg.numHashes)._1
-    val stats = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Double, Long)]()
-    var pendingCapped = 0L // set by the near-dup stage's cap reporter
-
-    // cheap mode: the (count, token-sum) pair rides each checkpoint's own
-    // materialize job as observe metrics — same rows, same values, zero
-    // extra jobs. `curObs` is the observation attached to the CURRENT
-    // checkpoint.
-    var curObs: Observation = null
-    def ckpt(df: DataFrame): DataFrame =
-      if (cfg.statsMode == "cheap") {
-        curObs = Observation()
-        df.observe(curObs, count(lit(1)).as("n"),
-          coalesce(sum(TextAnalysis.tokenCount(col(textCol)).cast("long")), lit(0L))
-            .as("tok"))
-          .localCheckpoint(true, CkptSer)
-      } else df.localCheckpoint(true, CkptSer)
-    var cur = ckpt(docs.where(col(textCol).isNotNull))
-    def exactCounts(): (Long, Long) = {
-      val r = cur.agg(count(lit(1)),
-        coalesce(sum(TextAnalysis.tokenCount(col(textCol)).cast("long")), lit(0L)))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    def measure(stage: String, wallSec: Double): Unit = {
-      val (rows, toks) = cfg.statsMode match {
-        case "off" => (-1L, -1L)
-        case "cheap" => awaitObs(curObs)
-          .map(r => (r.getLong(0), r.getLong(1)))
-          .getOrElse(exactCounts())
-        case _ => exactCounts()
-      }
-      stats += ((stats.size, stage, rows, toks, wallSec, pendingCapped))
-      pendingCapped = 0L
-    }
-    def step(stage: String)(f: DataFrame => DataFrame): Unit = {
-      val prev = cur
-      val t0 = System.nanoTime()
-      cur = ckpt(f(prev)) // eager: the stage materializes here
-      measure(stage, (System.nanoTime() - t0) / 1e9)
-      // prev's blocks free IMMEDIATELY once cur is materialized — holding
-      // them to the end would stack every stage's full corpus in executor
-      // storage at once (~9x the working set at the benched sizes).
-      org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)
-        .foreach(_.unpersist(blocking = false))
-    }
-    measure("input", 0.0)
-
-    step("fix_encoding")(df => df.withColumn(textCol,
-      graft.functions.NormalizeKernel.nfkc(
-        graft.functions.MojibakeKernel.fixMojibake(col(textCol)))))
-    step("html_extract")(df => df
-      .withColumn(textCol, graft.functions.HtmlKernel.htmlToText(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
-    step("langid_filter")(df => df.where(
-      TextAnalysis.languageId(col(textCol)).isin(cfg.keepLangs.toSeq: _*)))
-    step("quality_filter")(qualityFilter(_, textCol, cfg))
-    cfg.piiMaxDensity.foreach { maxD =>
-      step("pii_filter")(df => df.where(
-        TextAnalysis.piiStats(col(textCol)).getField("density") <= maxD))
-    }
+    val text = col(textCol)
+    Seq[(String, DataFrame => DataFrame)](
+      "fix_encoding" -> (_.withColumn(textCol,
+        graft.functions.NormalizeKernel.nfkc(
+          graft.functions.MojibakeKernel.fixMojibake(text)))),
+      "html_extract" -> (_
+        .withColumn(textCol, graft.functions.HtmlKernel.htmlToText(text))
+        .where(trim(text) =!= "")),
+      "langid_filter" -> (_.where(
+        TextAnalysis.languageId(text).isin(cfg.keepLangs.toSeq: _*))),
+      "quality_filter" -> (qualityFilter(_, textCol, cfg))) ++
+    cfg.piiMaxDensity.map(maxD => "pii_filter" -> ((df: DataFrame) => df.where(
+      TextAnalysis.piiStats(text).getField("density") <= maxD))) ++
     // Model-based stages (r15) — optional, before the wide dedup stages so
     // model-rejected rows never pay a shuffle. Both are zero-shuffle row
     // scorers (hashed features / log-ratio table ride the closure once);
     // DSIR's top-k is the slim id-projected form.
-    cfg.qualityModel.foreach { m =>
-      step("model_quality_filter") { df =>
-        val s = QualityClassifier.score(col(textCol), m)
-        if (cfg.qualityModelPareto)
-          df.where(QualityClassifier.paretoKeep(s, col(idCol),
-            cfg.qualityParetoAlpha, cfg.seed))
-        else df.where(s >= cfg.qualityModelMin)
-      }
-    }
-    cfg.dsirTarget.foreach { target =>
-      require(cfg.dsirN > 0,
-        s"dsirTarget is set but dsirN=${cfg.dsirN} — the DSIR stage needs a " +
-          "positive selection size")
-      step("dsir_resample")(df => Dsir.resampleNSlim(df, target, textCol,
-        Seq(idCol), cfg.dsirN, ngrams = cfg.dsirNgrams, seed = cfg.seed)
-        .drop("dsir_logw"))
-    }
-    step("line_dedup")(df => df
-      .withColumn(textCol, TextAnalysis.removeRepeatedLines(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
-    // Content-hash exact dedup with the deterministic keep-lowest-id rule
-    // (plain dropDuplicates keeps an arbitrary row; pipelines must be
-    // replayable).
-    step("exact_dedup")(df => Dedup.exactKeepFirst(
-      df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
-      Seq("__fp"), idCol).drop("__fp"))
-    step("near_dedup")(df => Dedup.dropNearDupsMinHash(df, idCol, textCol,
-      cfg.nearDupThreshold, cfg.numHashes, bands, cfg.shingleWidth,
-      cfg.maxBucket, onCapDrops = (_, rows) => pendingCapped = rows))
-    evalDocs.foreach { ev =>
-      // Auto plan: benchmark-sized eval gram sets fuse to a single
-      // projection+filter pass (r14 — one corpus pass instead of the
-      // join plan's gram explode + anti-join); oversized ones fall back
-      // to the join path. Same minHits=1 keep set either way.
-      step("decontaminate")(df => Decontamination.decontaminateAuto(df, ev,
-        idCol, textCol, cfg.decontaminateNgram))
-    }
-    if (cfg.budgetTokens > 0L)
-      step("token_budget")(df => Sampling.sampleTokenBudget(
-        df.withColumn("__tok", TextAnalysis.tokenCount(col(textCol)).cast("long")),
-        Seq(idCol), "__tok", cfg.budgetTokens, cfg.seed).drop("__tok"))
-
-    import spark.implicits._
-    Result(cur,
-      stats.toSeq.toDF("ord", "stage", "rows_out", "tokens_out", "wall_sec",
-        "capped_rows"))
+    cfg.qualityModel.map(m => "model_quality_filter" -> { (df: DataFrame) =>
+      val s = QualityClassifier.score(text, m)
+      if (cfg.qualityModelPareto)
+        df.where(QualityClassifier.paretoKeep(s, col(idCol),
+          cfg.qualityParetoAlpha, cfg.seed))
+      else df.where(s >= cfg.qualityModelMin)
+    }) ++
+    cfg.dsirTarget.map(target => "dsir_resample" -> ((df: DataFrame) =>
+      Dsir.resampleNSlim(df, target, textCol, Seq(idCol), cfg.dsirN,
+        ngrams = cfg.dsirNgrams, seed = cfg.seed).drop("dsir_logw"))) ++
+    Seq[(String, DataFrame => DataFrame)](
+      "line_dedup" -> (_
+        .withColumn(textCol, TextAnalysis.removeRepeatedLines(text))
+        .where(trim(text) =!= "")),
+      // Content-hash exact dedup with the deterministic keep-lowest-id rule
+      // (plain dropDuplicates keeps an arbitrary row; pipelines must be
+      // replayable).
+      "exact_dedup" -> (df => Dedup.exactKeepFirst(
+        df.withColumn("__fp", TextAnalysis.fingerprint(text)),
+        Seq("__fp"), idCol).drop("__fp")),
+      "near_dedup" -> (Dedup.dropNearDupsMinHash(_, idCol, textCol,
+        cfg.nearDupThreshold, cfg.numHashes, bands, cfg.shingleWidth,
+        cfg.maxBucket, onCapDrops = (_, rows) => run.capped = rows))) ++
+    // Auto plan: benchmark-sized eval gram sets fuse to a single
+    // projection+filter pass (r14 — one corpus pass instead of the join
+    // plan's gram explode + anti-join); oversized ones fall back to the
+    // join path. Same minHits=1 keep set either way.
+    evalDocs.map(ev => "decontaminate" -> ((df: DataFrame) =>
+      Decontamination.decontaminateAuto(df, ev, idCol, textCol,
+        cfg.decontaminateNgram))) ++
+    Option.when(cfg.budgetTokens > 0L)("token_budget" -> ((df: DataFrame) =>
+      Sampling.sampleTokenBudget(
+        df.withColumn("__tok", TextAnalysis.tokenCount(text).cast("long")),
+        Seq(idCol), "__tok", cfg.budgetTokens, cfg.seed).drop("__tok")))
   }
 
   // ------------------------------------------------------ image pipeline
@@ -283,10 +294,7 @@ object Pipeline extends org.apache.spark.internal.Logging {
       maxCorpusImages: Long = 50000000L,
       targetW: Int = 64,
       targetH: Int = 64,
-      resizeFormat: String = "png",
-      // "exact" | "cheap" | "off" (r18) — the [[Config.statsMode]] knob
-      // for the image pipeline's (rows, bytes) stats.
-      statsMode: String = "exact")
+      resizeFormat: String = "png")
 
   /** The multimodal sibling of [[curate]]: image-corpus curation as one
     * entry point —
@@ -311,57 +319,23 @@ object Pipeline extends org.apache.spark.internal.Logging {
     * docs carry `phash` and the resized payload column. */
   def curateImages(docs: DataFrame, idCol: String, binCol: String,
       cfg: ImageConfig = ImageConfig()): Result = {
-    val spark = docs.sparkSession
-    require(StatsModes(cfg.statsMode),
-      s"statsMode must be one of ${StatsModes.mkString("/")}, got '${cfg.statsMode}'")
-    val stats = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Double)]()
     // bytes_out sums the stage's OWN payload column: the resize stage
     // reports the RESIZED volume (the number a storage budget watches),
     // not the source payload it still carries alongside (r14 — ADVICE).
-    // cheap mode (r18): the pair rides the checkpoint's materialize job.
-    var curObs: Observation = null
-    def ckpt(df: DataFrame, bytesCol: String): DataFrame =
-      if (cfg.statsMode == "cheap") {
-        curObs = Observation()
-        df.observe(curObs, count(lit(1)).as("n"),
-          coalesce(sum(length(col(bytesCol)).cast("long")), lit(0L)).as("bytes"))
-          .localCheckpoint(true, CkptSer)
-      } else df.localCheckpoint(true, CkptSer)
-    var cur = ckpt(docs.where(col(binCol).isNotNull), binCol)
-    def measure(stage: String, wallSec: Double, bytesCol: String): Unit = {
-      def exactCounts(): (Long, Long) = {
-        val r = cur.agg(count(lit(1)),
-          coalesce(sum(length(col(bytesCol)).cast("long")), lit(0L))).collect()(0)
-        (r.getLong(0), r.getLong(1))
-      }
-      val (rows, bytes) = cfg.statsMode match {
-        case "off" => (-1L, -1L)
-        case "cheap" => awaitObs(curObs)
-          .map(r => (r.getLong(0), r.getLong(1)))
-          .getOrElse(exactCounts())
-        case _ => exactCounts()
-      }
-      stats += ((stats.size, stage, rows, bytes, wallSec))
+    val cur = new Track(docs.where(col(binCol).isNotNull), byteAggs(binCol), CkptSer)
+    def counts = (cur.agg.getLong(0), cur.agg.getLong(1))
+    val run = new Runner
+    run.record("input", 0.0, counts)
+    mediaStages("image", idCol, binCol,
+      MediaConfig(cfg.maxDistance, cfg.pieces, cfg.maxCorpusImages), cfg).foreach {
+      case ("decode", body) => run.step("decode_phash", cur, counts)(body)
+      case ("resize", body) =>
+        cur.aggs = byteAggs("resized")
+        run.step("resize", cur, counts)(body)
+      case (stage, body) => run.step(stage, cur, counts)(body)
     }
-    def step(stage: String, bytesCol: String = binCol)(f: DataFrame => DataFrame): Unit = {
-      val prev = cur
-      val t0 = System.nanoTime()
-      cur = ckpt(f(prev), bytesCol)
-      measure(stage, (System.nanoTime() - t0) / 1e9, bytesCol)
-      org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)
-        .foreach(_.unpersist(blocking = false))
-    }
-    measure("input", 0.0, binCol)
-    step("decode_phash")(df => decodeStage(df, binCol, "phash", "phash"))
-    step("exact_dedup")(df => Dedup.exactKeepFirst(
-      df.withColumn("__fp", xxhash64(col(binCol))), Seq("__fp"), idCol)
-      .drop("__fp"))
-    step("near_dedup")(df => Dedup.dropNearDupsPHash(df, idCol, "phash",
-      cfg.maxDistance, cfg.pieces, cfg.maxCorpusImages))
-    step("resize", bytesCol = "resized")(df => resizeStage(df, binCol, cfg))
-    import spark.implicits._
-    Result(cur,
-      stats.toSeq.toDF("ord", "stage", "rows_out", "bytes_out", "wall_sec"))
+    Result(cur.df,
+      run.stats(docs.sparkSession, "rows_out", "bytes_out").drop("capped_rows"))
   }
 
   /** The sketch stage body of both media pipelines: the `kind` sketch
@@ -379,19 +353,51 @@ object Pipeline extends org.apache.spark.internal.Logging {
     Multimodal.resizeImages(df, binCol, cfg.targetW, cfg.targetH, cfg.resizeFormat)
       .where(col("resized").isNotNull)
 
+  /** Each modality's sketch kind ([[Multimodal.mediaSketch64]]) and sketch
+    * column: image = real decode + pHash, audio = spectral-band hash,
+    * video = payload fingerprint. */
+  private val Sketches = Map("image" -> ("phash", "phash"),
+    "audio" -> ("audio_spectral", "ahash"), "video" -> ("video_payload", "vhash"))
+
+  /** The media leg [[curateImages]] and [[curateInterleavedMm]] both run
+    * for a modality, in order: decode (the sketch; undecodable payloads
+    * dropped) → exact_dedup (payload hash, keep-lowest `idCol`) →
+    * near_dedup (sketch Hamming radius, [[Dedup.dropNearDupsPHash]]) →
+    * resize (images) or profile_dedup (video, when `mc.profilePairs`). */
+  private def mediaStages(mod: String, idCol: String, binCol: String,
+      mc: MediaConfig, ic: ImageConfig): Seq[(String, DataFrame => DataFrame)] = {
+    val (kind, sketch) = Sketches(mod)
+    Seq[(String, DataFrame => DataFrame)](
+      "decode" -> (decodeStage(_, binCol, kind, sketch)),
+      "exact_dedup" -> (df => Dedup.exactKeepFirst(
+        df.withColumn("__fp", xxhash64(col(binCol))), Seq("__fp"), idCol)
+        .drop("__fp")),
+      "near_dedup" -> (Dedup.dropNearDupsPHash(_, idCol, sketch,
+        mc.maxDistance, mc.pieces, mc.maxCorpus))) ++
+    Option.when(mod == "image")("resize" -> ((df: DataFrame) => resizeStage(df, binCol, ic))) ++
+    // Re-encode-tolerant leg (r17): the payload sketch above is re-mux-exact
+    // only; this stage kills re-ENCODED copies via the size-profile
+    // signature + exact Spearman verify, keep-lowest-id per pair-graph
+    // component (so slot survival replays from id arithmetic exactly like
+    // every other dedup stage).
+    Option.when(mod == "video" && mc.profilePairs)("profile_dedup" -> { (df: DataFrame) =>
+      val pairs = Multimodal.videoProfilePairs(df, idCol, binCol,
+        maxDistance = mc.profileMaxDistance,
+        minSpearman = mc.profileMinSpearman,
+        flatIndex = mc.profileFlatIndex)
+      val losers = Dedup.connectedComponents(pairs, "id_a", "id_b")
+        .where(col("id") =!= col("component"))
+        .select(col("id").as(idCol))
+      df.join(losers, Seq(idCol), "left_anti")
+    })
+  }
+
   // ------------------------------------------------ interleaved pipeline
 
   final case class InterleavedConfig(
       text: Config = Config(),
       image: ImageConfig = ImageConfig(),
       maxImagesPerDoc: Int = 1000,
-      // "exact" | "cheap" | "off" (r18 — VERDICT r17 #1): the interleaved
-      // curator's own stats knob (the nested text/image configs' statsMode
-      // fields are NOT consulted here — this pipeline runs its own stage
-      // chain). `cheap` folds every per-stage (docs, media-slots) count
-      // into the stage checkpoints' materialize jobs as observe metrics —
-      // identical values, zero extra jobs.
-      statsMode: String = "exact",
       // Storage level for the PAYLOAD-bearing side frames (r18 — VERDICT
       // r17 #2): the media side-checkpoint and the per-modality exploded
       // frames, each written once and read once or twice. The default
@@ -408,11 +414,13 @@ object Pipeline extends org.apache.spark.internal.Logging {
     * image array, and the curation composes [[curate]]'s FULL text chain
     * with [[curateImages]]'s image stages over ONE corpus:
     *
-    *   text: fix encoding → HTML→text → langid filter → quality filter →
-    *   within-doc repeated-line removal → exact dedup (content hash,
-    *   keep-lowest-id) → minhash near-dup removal → n-gram
-    *   decontamination (when `evalDocs` is given) — a document dropped
-    *   by ANY text stage takes its image slots with it — then images:
+    *   text: [[curate]]'s stage list, run as it is (fix encoding →
+    *   HTML→text → langid filter → quality filter → the configured
+    *   optional PII/model/DSIR stages → within-doc repeated-line removal
+    *   → exact dedup → minhash near-dup removal → n-gram decontamination
+    *   when `evalDocs` is given → token budget when `budgetTokens > 0`)
+    *   — a document dropped by ANY text stage takes its image slots with
+    *   it — then images:
     *   explode to (doc, idx, payload) → decode+pHash (undecodable
     *   dropped) → byte-exact dedup → perceptual near-dup removal →
     *   bilinear resize → reassemble per-doc arrays in original slot
@@ -420,8 +428,8 @@ object Pipeline extends org.apache.spark.internal.Logging {
     *
     * (r14 shipped only the filter prefix, so two byte-identical
     * interleaved documents both survived with their duplicate text —
-    * VERDICT r14 What's-wrong #2; the chain above is stage-for-stage the
-    * [[curate]] order, same Config knobs, same near-dup banding/cap
+    * VERDICT r14 What's-wrong #2; the text chain is the one list
+    * [[curate]] runs, same Config knobs, same near-dup banding/cap
     * accounting.)
     *
     * Image ids are `doc_id · maxImagesPerDoc + idx`, so keep-lowest-id
@@ -486,15 +494,16 @@ object Pipeline extends org.apache.spark.internal.Logging {
     * shared keep-lowest-id rule (earliest slot of the earliest document
     * wins corpus-wide), one localCheckpoint per stage, per-stage stats.
     *
-    * Text chain first ([[curate]]'s stages — a document dropped by any
-    * text stage takes ALL its media slots along), then per modality:
-    * explode → sketch (undecodable payloads dropped: image = real
-    * decode + pHash; audio = spectral-band hash; video = payload
-    * fingerprint — each one [[Multimodal.mediaSketch64]] column) →
-    * byte-exact dedup → sketch near-dup removal
-    * ([[Dedup.dropNearDupsPHash]] — sketch-agnostic, zero-shuffle MIH up
-    * to the corpus bound, banded join past it) → images additionally
-    * resize → reassemble per-doc arrays in original slot order. Stats
+    * Text chain first ([[curate]]'s stage list — a document dropped by
+    * any text stage takes ALL its media slots along), then per modality
+    * explode and the media leg [[curateImages]] runs for images too:
+    * sketch (undecodable payloads dropped: image = real decode + pHash;
+    * audio = spectral-band hash; video = payload fingerprint — each one
+    * [[Multimodal.mediaSketch64]] column) → byte-exact dedup → sketch
+    * near-dup removal ([[Dedup.dropNearDupsPHash]] — sketch-agnostic,
+    * zero-shuffle MIH up to the corpus bound, banded join past it) →
+    * images additionally resize → reassemble per-doc arrays in original
+    * slot order. Stats
     * frame keeps [[curateInterleaved]]'s exact schema — `images_out`
     * counts LIVE MEDIA SLOTS across all modalities (settled modalities
     * by exploded-frame count, pending ones by array sizes); stage
@@ -515,24 +524,14 @@ object Pipeline extends org.apache.spark.internal.Logging {
       evalDocs: Option[DataFrame] = None,
       audioCfg: MediaConfig = MediaConfig(maxDistance = 3, pieces = 4),
       videoCfg: MediaConfig = MediaConfig(maxDistance = 4, pieces = 8)): Result = {
-    val spark = docs.sparkSession
-    val stats = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Double, Long)]()
-    val tc = cfg.text
     val ic = cfg.image
     require(mediaCols.nonEmpty, "mediaCols must name at least one modality")
-    require(mediaCols.forall { case (m, _) => Set("image", "audio", "video")(m) },
+    require(mediaCols.forall { case (m, _) => Sketches.contains(m) },
       s"modalities must be image/audio/video, got ${mediaCols.map(_._1).mkString(", ")}")
     require(mediaCols.map(_._1).distinct.size == mediaCols.size,
       s"duplicate modality in ${mediaCols.map(_._1).mkString(", ")}")
-    require(tc.bands >= 0, s"bad bands ${tc.bands} (0 = auto)")
-    require(StatsModes(cfg.statsMode),
-      s"statsMode must be one of ${StatsModes.mkString("/")}, got '${cfg.statsMode}'")
-    val statsOn = cfg.statsMode != "off"
-    val cheap = cfg.statsMode == "cheap"
-    val bands =
-      if (tc.bands > 0) tc.bands
-      else Dedup.lshParamsSelective(tc.nearDupThreshold, tc.numHashes)._1
-    var pendingCapped = 0L
+    val run = new Runner
+    val chain = textStages(cfg.text, idCol, textCol, evalDocs, run)
 
     // PAYLOAD/TEXT SPLIT (r17, tightened r18): the text chain checkpoints
     // its frame after EVERY stage, so media payload arrays riding it were
@@ -589,241 +588,66 @@ object Pipeline extends org.apache.spark.internal.Logging {
     val mediaSide = input
       .select(col(idCol).cast("long").as("__doc") +:
         mediaCols.map { case (_, mcol) => col(mcol) }: _*)
-    // cheap mode: each curDocs checkpoint carries an observation with
-    // (docs count, per-modality slot sums) — the exact values nDocs() /
-    // pendingCounts() would otherwise run dedicated jobs for. Row layout:
-    // index 0 = docs, 1 + i = slot sum of mediaCols(i).
-    var docsObs: Observation = null
-    def ckptDocs(df: DataFrame): DataFrame =
-      if (cheap) {
-        docsObs = Observation()
-        df.observe(docsObs, count(lit(1)).as("n"),
-          mediaCols.map { case (mod, _) =>
-            coalesce(sum(col(s"__n_$mod").cast("long")), lit(0L)).as(s"s_$mod")
-          }: _*)
-          .localCheckpoint(true, CkptSer)
-      } else df.localCheckpoint(true, CkptSer)
-    var curDocs = ckptDocs(input
+    // The text frame: text plus one slot-count column per modality.
+    val slotCols = mediaCols.map { case (mod, _) => s"__n_$mod" }
+    val text = new Track(input
       .select(docs.columns.filterNot(mediaNames).map(col).toSeq ++
         mediaCols.map { case (mod, mcol) =>
-          coalesce(size(col(mcol)), lit(0)).as(s"__n_$mod") }: _*))
+          coalesce(size(col(mcol)), lit(0)).as(s"__n_$mod") }: _*),
+      slotAggs(slotCols), CkptSer)
     // input stays persisted: the per-modality explodes read their payload
     // bytes from it (retired after the last explode).
     // modality -> exploded (doc, idx, payload) frame, once text settles
-    val frames = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
-    // Count memoization (r17): the stats contract reports (docs, media)
-    // after EVERY stage, but a frame only changes at its own stages —
-    // curDocs is frozen through all media stages, and a settled
-    // modality's frame is frozen through every other modality's. The
-    // caches hold those counts; the step functions invalidate exactly
-    // what they changed (same values, ~2 count jobs per stage fewer).
-    var docsCount: Long = -1L
-    val frameCount = scala.collection.mutable.HashMap.empty[String, Long]
-    // cheap mode: per-modality frame observations (count; the explode
-    // checkpoint's also carries max slot index for the maxImagesPerDoc
-    // contract check).
-    val frameObs = scala.collection.mutable.HashMap.empty[String, Observation]
-    def nDocs(): Long = {
-      if (docsCount < 0L)
-        docsCount =
-          if (cheap) awaitObs(docsObs).map(_.getLong(0)).getOrElse(curDocs.count())
-          else curDocs.count()
-      docsCount
-    }
-    // Pending-modality slot counts are cached and refreshed in ONE agg
-    // over curDocs, invalidated only when curDocs changes (r16 review:
-    // recomputing them per MEDIA stage re-scanned the full corpus blocks
-    // — payload bytes included — for values that cannot have changed;
-    // r17: the slim frame's count columns make the agg payload-free).
-    var pendingCache: Map[String, Long] = null
-    def pendingCounts(): Map[String, Long] = {
-      if (pendingCache == null) {
-        val pending = mediaCols.filter { case (mod, _) => !frames.contains(mod) }
-        def exactPending(): Map[String, Long] =
-          if (pending.isEmpty) Map.empty
-          else {
-            val aggs = pending.map { case (mod, _) =>
-              coalesce(sum(col(s"__n_$mod").cast("long")), lit(0L))
-            }
-            val r = curDocs.agg(aggs.head, aggs.tail: _*).collect()(0)
-            pending.zipWithIndex.map { case ((mod, _), i) => mod -> r.getLong(i) }.toMap
-          }
-        pendingCache =
-          if (pending.isEmpty) Map.empty
-          else if (cheap)
-            // Row layout pinned by ckptDocs: 1 + position in mediaCols.
-            awaitObs(docsObs).map { r =>
-              val at = mediaCols.map(_._1).zipWithIndex.toMap
-              pending.map { case (mod, _) => mod -> r.getLong(1 + at(mod)) }.toMap
-            }.getOrElse(exactPending())
-          else exactPending()
-      }
-      pendingCache
-    }
-    def nMedia(): Long = mediaCols.map { case (mod, _) =>
-      frames.get(mod) match {
-        case Some(f) => frameCount.getOrElseUpdate(mod,
-          (if (cheap) frameObs.get(mod).flatMap(o => awaitObs(o)).map(_.getLong(0))
-           else None).getOrElse(f.count()))
-        case None => pendingCounts()(mod)
-      }
-    }.sum
-    def measure(stage: String, wallSec: Double): Unit = {
-      if (statsOn)
-        stats += ((stats.size, stage, nDocs(), nMedia(), wallSec, pendingCapped))
-      else
-        stats += ((stats.size, stage, -1L, -1L, wallSec, pendingCapped))
-      pendingCapped = 0L
-    }
-    def retire(prev: DataFrame): Unit =
-      org.apache.spark.sql.graftshim.GraftSql.checkpointedRdd(prev)
-        .foreach(_.unpersist(blocking = false))
-    def stepDocs(stage: String)(f: DataFrame => DataFrame): Unit = {
-      val prev = curDocs
-      val t0 = System.nanoTime()
-      curDocs = ckptDocs(f(prev))
-      pendingCache = null // docs changed: pending slot sums are stale
-      docsCount = -1L
-      measure(stage, (System.nanoTime() - t0) / 1e9)
-      retire(prev)
-    }
-    measure("input", 0.0)
+    val frames = scala.collection.mutable.LinkedHashMap.empty[String, Track]
+    // (docs, live media slots): a settled modality counts its exploded
+    // frame's rows, a pending one the slot sums of the text frame.
+    def counts = (text.agg.getLong(0), mediaCols.indices.map { i =>
+      frames.get(mediaCols(i)._1).fold(text.agg.getLong(1 + i))(_.agg.getLong(0))
+    }.sum)
+    run.record("input", 0.0, counts)
 
-    // Text stages — the [[curate]] chain's filter prefix; a document that
-    // dies here takes its media slots with it (visible in images_out).
-    stepDocs("fix_encoding")(df => df.withColumn(textCol,
-      graft.functions.NormalizeKernel.nfkc(
-        graft.functions.MojibakeKernel.fixMojibake(col(textCol)))))
-    stepDocs("html_extract")(df => df
-      .withColumn(textCol, graft.functions.HtmlKernel.htmlToText(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
-    stepDocs("langid_filter")(df => df.where(
-      TextAnalysis.languageId(col(textCol)).isin(tc.keepLangs.toSeq: _*)))
-    stepDocs("quality_filter")(qualityFilter(_, textCol, tc))
-    tc.piiMaxDensity.foreach { maxD =>
-      stepDocs("pii_filter")(df => df.where(
-        TextAnalysis.piiStats(col(textCol)).getField("density") <= maxD))
-    }
-    // Text dedup chain (r15) — [[curate]]'s stages verbatim; a duplicated
-    // interleaved document dies HERE and its media slots die with it
-    // (slot survival shows in images_out, the replay contract).
-    stepDocs("line_dedup")(df => df
-      .withColumn(textCol, TextAnalysis.removeRepeatedLines(col(textCol)))
-      .where(trim(col(textCol)) =!= ""))
-    stepDocs("exact_dedup")(df => Dedup.exactKeepFirst(
-      df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
-      Seq("__fp"), idCol).drop("__fp"))
-    stepDocs("near_dedup")(df => Dedup.dropNearDupsMinHash(df, idCol, textCol,
-      tc.nearDupThreshold, tc.numHashes, bands, tc.shingleWidth,
-      tc.maxBucket, onCapDrops = (_, rows) => pendingCapped = rows))
-    evalDocs.foreach { ev =>
-      stepDocs("decontaminate")(df => Decontamination.decontaminateAuto(df, ev,
-        idCol, textCol, tc.decontaminateNgram))
-    }
+    // Text stages — [[curate]]'s chain; a document that dies here takes
+    // its media slots with it (slot survival shows in images_out, the
+    // replay contract).
+    chain.foreach { case (stage, body) => run.step(stage, text, counts)(body) }
 
     // Media stages per modality, over that modality's exploded frame;
     // `__mid` linearizes (doc, slot) so the shared keep-lowest-id rule
     // prefers earlier documents, then earlier slots. Modalities dedup
     // INDEPENDENTLY (an audio clip never pairs with a video payload).
     mediaCols.foreach { case (mod, mcol) =>
-      val p = mod match {
-        case "image" => "img"
-        case "audio" => "aud"
-        case _ => "vid"
-      }
-      val t0x = System.nanoTime()
-      // Frame checkpoints (payload-bearing) sit at cfg.payloadLevel; in
-      // cheap mode each carries a count observation, and the EXPLODE
-      // checkpoint additionally the max slot index (the maxImagesPerDoc
-      // contract check — observed in off mode too, so the contract holds
-      // without a dedicated job in every mode).
-      var explodeObs: Observation = null
-      def ckptFrame(df: DataFrame, isExplode: Boolean): DataFrame =
-        if (cheap || (isExplode && !statsOn)) {
-          val o = Observation()
-          frameObs(mod) = o
-          if (isExplode) explodeObs = o
-          val base = df.observe(o, count(lit(1)).as("n"),
-            (if (isExplode) Seq(coalesce(max(col("__idx")), lit(0)).as("mx"))
-             else Nil): _*)
-          base.localCheckpoint(true, cfg.payloadLevel)
-        } else df.localCheckpoint(true, cfg.payloadLevel)
+      val p = Map("image" -> "img", "audio" -> "aud", "video" -> "vid")(mod)
+      val t0 = System.nanoTime()
       // Surviving docs' payloads from the side frame: one left-semi join
       // on the curated ids (the only place this modality's bytes move),
       // then explode to slots. AQE picks the join strategy; the payload
-      // side never re-shuffles after this.
-      frames(mod) = ckptFrame(mediaSide
-        .join(curDocs.select(col(idCol).cast("long").as("__doc")),
+      // side never re-shuffles after this. Frame checkpoints are
+      // payload-bearing and sit at cfg.payloadLevel; the explode's also
+      // observes the max slot index (the maxImagesPerDoc contract check).
+      val frame = new Track(mediaSide
+        .join(text.df.select(col(idCol).cast("long").as("__doc")),
           Seq("__doc"), "left_semi")
         .select(col("__doc"),
           posexplode(coalesce(col(mcol),
-            array().cast(docs.schema(mcol).dataType))).as(Seq("__idx", "__media"))),
-        isExplode = true)
+            array().cast(docs.schema(mcol).dataType))).as(Seq("__idx", "__media")))
+        .withColumn("__mid", col("__doc") * cfg.maxImagesPerDoc + col("__idx")),
+        explodeAggs, cfg.payloadLevel)
+      frames(mod) = frame
       // The LAST modality's explode was the input checkpoint's final
       // reader — its payload blocks retire here (r18: explodes read input
       // directly; holding it longer would stack it against the frames).
       if (mod == mediaCols.last._1) retire(input)
-      measure(s"${p}_explode", (System.nanoTime() - t0x) / 1e9)
-      def exactOver(): Int = frames(mod).agg(coalesce(max("__idx"), lit(0)))
-        .collect()(0).getInt(0)
-      val over =
-        if (explodeObs != null)
-          awaitObs(explodeObs).map(_.getInt(1)).getOrElse(exactOver())
-        else exactOver()
+      run.record(s"${p}_explode", seconds(t0), counts)
+      val over = frame.agg.getInt(1)
       require(over < cfg.maxImagesPerDoc,
         s"a document carries ${over + 1} $mod slots >= maxImagesPerDoc=${cfg.maxImagesPerDoc} — raise the knob")
-      def stepMedia(stage: String)(f: DataFrame => DataFrame): Unit = {
-        val prev = frames(mod)
-        val t0 = System.nanoTime()
-        frames(mod) = ckptFrame(f(prev), isExplode = false)
-        frameCount.remove(mod) // only THIS modality's count went stale
-        measure(stage, (System.nanoTime() - t0) / 1e9)
-        retire(prev)
+      val mc = mod match {
+        case "image" => MediaConfig(ic.maxDistance, ic.pieces, ic.maxCorpusImages)
+        case "audio" => audioCfg
+        case _ => videoCfg
       }
-      def withMid(df: DataFrame): DataFrame = df.withColumn("__mid",
-        col("__doc") * cfg.maxImagesPerDoc + col("__idx"))
-      mod match {
-        case "image" =>
-          stepMedia("img_decode")(df =>
-            decodeStage(withMid(df), "__media", "phash", "phash"))
-          stepMedia("img_exact_dedup")(df => Dedup.exactKeepFirst(
-            df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
-            .drop("__fp"))
-          stepMedia("img_near_dedup")(df => Dedup.dropNearDupsPHash(df, "__mid",
-            "phash", ic.maxDistance, ic.pieces, ic.maxCorpusImages))
-          stepMedia("img_resize")(df => resizeStage(df, "__media", ic))
-        case "audio" =>
-          stepMedia("aud_decode")(df =>
-            decodeStage(withMid(df), "__media", "audio_spectral", "ahash"))
-          stepMedia("aud_exact_dedup")(df => Dedup.exactKeepFirst(
-            df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
-            .drop("__fp"))
-          stepMedia("aud_near_dedup")(df => Dedup.dropNearDupsPHash(df, "__mid",
-            "ahash", audioCfg.maxDistance, audioCfg.pieces, audioCfg.maxCorpus))
-        case _ =>
-          stepMedia("vid_decode")(df =>
-            decodeStage(withMid(df), "__media", "video_payload", "vhash"))
-          stepMedia("vid_exact_dedup")(df => Dedup.exactKeepFirst(
-            df.withColumn("__fp", xxhash64(col("__media"))), Seq("__fp"), "__mid")
-            .drop("__fp"))
-          stepMedia("vid_near_dedup")(df => Dedup.dropNearDupsPHash(df, "__mid",
-            "vhash", videoCfg.maxDistance, videoCfg.pieces, videoCfg.maxCorpus))
-          // Re-encode-tolerant leg (r17): the payload sketch above is
-          // re-mux-exact only; this stage kills re-ENCODED copies via the
-          // size-profile signature + exact Spearman verify, keep-lowest-id
-          // per pair-graph component (so slot survival replays from id
-          // arithmetic exactly like every other dedup stage).
-          if (videoCfg.profilePairs)
-            stepMedia("vid_profile_dedup") { df =>
-              val pairs = Multimodal.videoProfilePairs(df, "__mid", "__media",
-                maxDistance = videoCfg.profileMaxDistance,
-                minSpearman = videoCfg.profileMinSpearman,
-                flatIndex = videoCfg.profileFlatIndex)
-              val losers = Dedup.connectedComponents(pairs, "id_a", "id_b")
-                .where(col("id") =!= col("component"))
-                .select(col("id").as("__mid"))
-              df.join(losers, Seq("__mid"), "left_anti")
-            }
+      mediaStages(mod, "__mid", "__media", mc, ic).foreach { case (stage, body) =>
+        run.step(s"${p}_$stage", frame, counts)(body)
       }
     }
 
@@ -832,12 +656,12 @@ object Pipeline extends org.apache.spark.internal.Logging {
     // curated original bytes); media-less documents keep their curated
     // text with empty arrays.
     val t0r = System.nanoTime()
-    var assembled = curDocs
-      .drop(mediaCols.map { case (mod, _) => s"__n_$mod" }: _*)
+    var assembled = text.df
+      .drop(slotCols: _*)
       .withColumn("__dockey", col(idCol).cast("long"))
     mediaCols.foreach { case (mod, mcol) =>
       val elem = if (mod == "image") "resized" else "__media"
-      val arrays = frames(mod).groupBy("__doc")
+      val arrays = frames(mod).df.groupBy("__doc")
         .agg(transform(sort_array(collect_list(struct(col("__idx"), col(elem)))),
           e => e.getField(elem)).as("__arr"))
       assembled = assembled
@@ -852,37 +676,16 @@ object Pipeline extends org.apache.spark.internal.Logging {
     // positional consumers saw a reordered schema. Select back to the
     // input's column order with the n_<mod>s counters appended — the
     // exact r16 contract.
-    val outObs = if (cheap) Observation() else null
-    val outPre = assembled
-      .select((docs.columns.map(col) ++
-        mediaCols.map { case (mod, _) => col(s"n_${mod}s") }).toSeq: _*)
-    val slotSum = coalesce(sum(
-      mediaCols.map { case (mod, _) => col(s"n_${mod}s").cast("long") }
-        .reduce(_ + _)), lit(0L))
-    val out = (if (cheap)
-        outPre.observe(outObs, count(lit(1)).as("n"), slotSum.as("slots"))
-      else outPre)
-      .localCheckpoint(true, CkptSer)
+    val nCols = mediaCols.map { case (mod, _) => s"n_${mod}s" }
+    val out = new Track(assembled.select((docs.columns ++ nCols).toSeq.map(col): _*),
+      slotAggs(nCols), CkptSer)
     // out is materialized (eager checkpoint): the final text- and
     // media-stage blocks retire like every earlier stage's — without this
     // each interleaved run would pin corpus-sized block sets for the
     // session's lifetime (only `out` is handed to the caller).
-    retire(curDocs)
-    mediaCols.foreach { case (mod, _) => retire(frames(mod)) }
-    def exactOut(): (Long, Long) = (out.count(),
-      out.agg(slotSum).collect()(0).getLong(0))
-    val (outDocs, outSlots) = cfg.statsMode match {
-      case "off" => (-1L, -1L)
-      case "cheap" => awaitObs(outObs)
-        .map(r => (r.getLong(0), r.getLong(1))).getOrElse(exactOut())
-      case _ => exactOut()
-    }
-    stats += ((stats.size, "reassemble", outDocs, outSlots,
-      (System.nanoTime() - t0r) / 1e9, 0L))
-
-    import spark.implicits._
-    Result(out,
-      stats.toSeq.toDF("ord", "stage", "docs_out", "images_out", "wall_sec",
-        "capped_rows"))
+    (text +: frames.values.toSeq).foreach(t => retire(t.df))
+    run.record("reassemble", seconds(t0r),
+      (out.agg.getLong(0), nCols.indices.map(i => out.agg.getLong(1 + i)).sum))
+    Result(out.df, run.stats(docs.sparkSession, "docs_out", "images_out"))
   }
 }

@@ -2549,12 +2549,7 @@ object LlmQueries {
         .select((col("k") + 9000L).as("doc_id"),
           when(col("k") === 0, enGood(lit("2")))
             .otherwise(enGood(lit("4"))).as("text"))
-      // statsMode=cheap (r18): per-stage counts ride each checkpoint's own
-      // materialize as observe metrics — identical values (Round18Spec pins
-      // cheap==exact; the oracle replay re-proves it), one job per stage
-      // fewer.
-      graft.llm.Pipeline.curate(corpus, "doc_id", "text", Some(eval),
-        cfg = graft.llm.Pipeline.Config(statsMode = "cheap"))
+      graft.llm.Pipeline.curate(corpus, "doc_id", "text", Some(eval))
         .stats.select("ord", "stage", "rows_out", "tokens_out",
           "capped_rows") // wall_sec is measurement, not oracle-replayable
         .orderBy("ord") // semantics; capped_rows must replay as all-zero
@@ -2603,7 +2598,7 @@ object LlmQueries {
       val r = graft.llm.Pipeline.curate(corpus, "doc_id", "text",
         cfg = graft.llm.Pipeline.Config(
           qualityModel = Some(model), qualityModelMin = 0.5,
-          dsirTarget = Some(target), dsirN = 40, statsMode = "cheap"))
+          dsirTarget = Some(target), dsirN = 40))
       val allCooking = r.docs.agg(all(pmod(col("doc_id"), lit(3)) === 0))
         .collect()(0).getBoolean(0)
       r.stats.select(col("ord"), col("stage"), col("rows_out"),
@@ -2637,8 +2632,7 @@ object LlmQueries {
         (id, bytes)
       }.toDF("doc_id", "payload")
       val r = graft.llm.Pipeline.curateImages(media, "doc_id", "payload",
-        graft.llm.Pipeline.ImageConfig(targetW = 32, targetH = 32,
-          statsMode = "cheap"))
+        graft.llm.Pipeline.ImageConfig(targetW = 32, targetH = 32))
       val dec = Multimodal.decodeImages(
         r.docs.select(col("doc_id"), col("resized")), "resized")
       val resizedOk = dec.agg(all(
@@ -2712,8 +2706,7 @@ object LlmQueries {
           col("doc_id").cast("string"), lit("b it was")))
       val r = graft.llm.Pipeline.curateInterleaved(corpus, "doc_id", "text",
         "images", graft.llm.Pipeline.InterleavedConfig(
-          image = graft.llm.Pipeline.ImageConfig(targetW = 32, targetH = 32),
-          statsMode = "cheap"),
+          image = graft.llm.Pipeline.ImageConfig(targetW = 32, targetH = 32)),
         evalDocs = Some(evalCorpus))
       val dec = Multimodal.decodeImages(
         r.docs.select(explode(col("images")).as("img")), "img")
@@ -2775,8 +2768,7 @@ object LlmQueries {
         lit("a the quick brown fox jumps over the lazy dog w"), fam,
         lit("b it was good that it is here and now w"), fam, lit("c")))
       val r = graft.llm.Pipeline.curateInterleavedMm(corpus, "doc_id", "text",
-        Seq("audio" -> "audios", "video" -> "videos"),
-        cfg = graft.llm.Pipeline.InterleavedConfig(statsMode = "cheap"))
+        Seq("audio" -> "audios", "video" -> "videos"))
       val audioOk = r.docs.agg(all(col("n_audios") ===
         lit(2) - when(pmod(col("doc_id"), lit(10)).isin(3, 5), 1).otherwise(0)
           - when(pmod(col("doc_id"), lit(4)) === 0, 1).otherwise(0)))
@@ -2839,7 +2831,6 @@ object LlmQueries {
         lit("b it was good that it is here and now w"), fam, lit("c")))
       val r = graft.llm.Pipeline.curateInterleavedMm(corpus, "doc_id", "text",
         Seq("video" -> "videos"),
-        cfg = graft.llm.Pipeline.InterleavedConfig(statsMode = "cheap"),
         videoCfg = graft.llm.Pipeline.MediaConfig(maxDistance = 4, pieces = 8,
           profilePairs = true))
       val videoOk = r.docs.agg(all(col("n_videos") ===

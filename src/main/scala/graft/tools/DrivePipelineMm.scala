@@ -158,15 +158,12 @@ object DrivePipelineMm extends Serializable {
     spark.sparkContext.setLogLevel("ERROR")
 
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(3000000L)
-    // r18 levers: stats mode (exact|cheap — VERDICT r17 #1) and payload
-    // storage (default|disk → DISK_ONLY side/exploded frames, #2). The
-    // bench-entry name carries non-default settings so runs land as
-    // separate bench_pipeline.json lines.
-    val statsMode = sys.env.getOrElse("SPARK_GRAFT_MM_STATS", "exact")
+    // r18 lever: payload storage (default|disk → DISK_ONLY side/exploded
+    // frames, VERDICT r17 #2). The bench-entry name carries the
+    // non-default setting so runs land as separate bench_pipeline.json
+    // lines.
     val payloadDisk = sys.env.get("SPARK_GRAFT_MM_PAYLOAD").contains("disk")
-    val variant = (if (statsMode != "exact") s"_$statsMode" else "") +
-      (if (payloadDisk) "_disk" else "")
-    require(statsMode != "off", "survival asserts need stats (exact or cheap)")
+    val variant = if (payloadDisk) "_disk" else ""
     val out = new StringBuilder
 
     def boxSteal(): Long = try {
@@ -383,7 +380,6 @@ object DrivePipelineMm extends Serializable {
         Seq("image" -> "images", "audio" -> "audios", "video" -> "videos"),
         graft.llm.Pipeline.InterleavedConfig(
           image = graft.llm.Pipeline.ImageConfig(maxDistance = 2),
-          statsMode = statsMode,
           payloadLevel =
             if (payloadDisk) org.apache.spark.storage.StorageLevel.DISK_ONLY
             else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),

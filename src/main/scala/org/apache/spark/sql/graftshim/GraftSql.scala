@@ -26,14 +26,6 @@ object GraftSql {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  /** Non-blocking read of an [[org.apache.spark.sql.Observation]]'s
-    * metrics row — `getRowOrEmpty` is `private[spark]`; this is the only
-    * way to ask "did the action that materialized the observed frame
-    * deliver metrics?" without the indefinite block of `get`. */
-  def observedRow(obs: org.apache.spark.sql.Observation)
-      : Option[org.apache.spark.sql.Row] =
-    obs.getRowOrEmpty
-
   /** The source filters a file scan pushes down (its `PushedFilters`):
     * `pushedDownFilters` is protected, and `translateFilter` over the
     * scan's data filters is how it computes them. */

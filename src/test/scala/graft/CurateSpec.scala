@@ -139,7 +139,7 @@ class CurateSpec extends AnyFunSuite {
 
   // --------------------------------------------------- job budget
 
-  test("default Pipeline.curate stays within its job budget, with identical survivors under exact stats") {
+  test("default Pipeline.curate stays within its job budget, with the planted survivors and stats") {
     val group = s"curate-budget-${System.nanoTime()}"
     val marker = s"$group-marker"
     val started = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -170,18 +170,24 @@ class CurateSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    // On a 40k-doc corpus a default curate ran 54 jobs under exact stats
-    // and 33 once stats rode the checkpoint jobs. The budget leaves room
-    // for the adaptive planner choosing a different join on this small
-    // plant.
+    // On a 40k-doc corpus a default curate ran 54 jobs when every stage
+    // counted with its own aggregate job and 33 once stats rode the
+    // checkpoint jobs. The budget leaves room for the adaptive planner
+    // choosing a different join on this small plant.
     assert(started.get() <= 36, s"default curate ran ${started.get()} jobs")
-    val exact = Pipeline.curate(plant, "id", "text", Some(evalDocs),
-      Pipeline.Config(statsMode = "exact"))
-    def stats(x: Pipeline.Result) = x.stats.orderBy("ord").collect()
-      .map(s => (s.getString(1), s.getLong(2), s.getLong(3), s.getLong(5))).toSeq
-    assert(stats(r) == stats(exact))
-    def ids(x: Pipeline.Result) = x.docs.select("id").collect().map(_.getLong(0)).toSet
-    assert(ids(r) == ids(exact))
-    assert(ids(r).size == 35, "exact copy, near copy and the eval doc are dropped")
+    val all = (0L until 38L).toSet
+    val kept = all -- Set(36L, 37L, 3L)
+    assert(r.docs.select("id").collect().map(_.getLong(0)).toSet == kept,
+      "exact copy, near copy and the eval doc are dropped")
+    // Planted (rows, tokens) per stage; the near copy carries one extra token.
+    def planted(ids: Set[Long]) = (ids.size.toLong, ids.toSeq.map(i => if (i == 37L) 22L else 21L).sum)
+    val want = Seq("input", "fix_encoding", "html_extract", "langid_filter",
+      "quality_filter", "line_dedup").map(_ -> planted(all)) ++ Seq(
+      "exact_dedup" -> planted(all - 36L), "near_dedup" -> planted(all -- Set(36L, 37L)),
+      "decontaminate" -> planted(kept))
+    val got = r.stats.orderBy("ord").collect()
+      .map(s => s.getString(1) -> (s.getLong(2), s.getLong(3))).toSeq
+    assert(got == want)
+    assert(r.stats.collect().forall(_.getLong(5) == 0L), "no bucket was capped")
   }
 }

@@ -45,7 +45,7 @@ class Round18DocSpec extends AnyFunSuite {
     }""")
     val docs = Generator.generate(spark, plan)("documents")
     val curated = Pipeline.curate(docs, "doc_id", "text",
-      cfg = Pipeline.Config(statsMode = "cheap"))
+      cfg = Pipeline.Config())
     Retrieval.buildAndWriteIndex(curated.docs, "doc_id", "text",
       "/tmp/graft_e2e_bm25", nBuckets = 8)
     val hits = Retrieval.scores(Retrieval.loadIndex(spark, "/tmp/graft_e2e_bm25"),
@@ -89,7 +89,7 @@ class Round18DocSpec extends AnyFunSuite {
       |}$q3)
       |val docs = Generator.generate(spark, plan)("documents")
       |val curated = Pipeline.curate(docs, "doc_id", "text",
-      |  cfg = Pipeline.Config(statsMode = "cheap"))
+      |  cfg = Pipeline.Config())
       |Retrieval.buildAndWriteIndex(curated.docs, "doc_id", "text",
       |  "/tmp/graft_e2e_bm25", nBuckets = 8)
       |val hits = Retrieval.scores(Retrieval.loadIndex(spark, "/tmp/graft_e2e_bm25"),

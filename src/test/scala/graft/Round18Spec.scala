@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-18 additions: pipeline stats modes (exact/cheap/off — cheap
-  * rides observe metrics on the stage checkpoints' own materialize jobs),
+/** Round-18 additions: pipeline stats observed on the stage checkpoints'
+  * own materialize jobs (checked against the planted counts here and
+  * against the aggregate over the same checkpoint in PipelineRunnerSpec),
   * the payload storage-level lever, the flat-index hatch on the streaming
   * profile guard, the id-contract check moved onto the checkpointed input,
   * videoProfileIndex's loud numeric-id guard, and the WriterLock
@@ -67,14 +68,14 @@ class Round18Spec extends AnyFunSuite {
       lit("b it was good that it is here and now w"), fam, lit("c")))
   }
 
-  private def runMm(statsMode: String,
+  private def runMm(
       payloadLevel: org.apache.spark.storage.StorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) = {
     val P = graft.llm.Pipeline
     P.curateInterleavedMm(mmPlant, "doc_id", "text",
       Seq("image" -> "images", "audio" -> "audios", "video" -> "videos"),
       P.InterleavedConfig(image = P.ImageConfig(maxDistance = 2),
-        statsMode = statsMode, payloadLevel = payloadLevel),
+        payloadLevel = payloadLevel),
       audioCfg = P.MediaConfig(maxDistance = 0, pieces = 4),
       videoCfg = P.MediaConfig(maxDistance = 4, pieces = 8, profilePairs = true))
   }
@@ -91,52 +92,44 @@ class Round18Spec extends AnyFunSuite {
       .map(x => (x.getLong(0), x.getSeq[Array[Byte]](1).map(_.toSeq)))
       .toSet
 
-  // ----------------------------------- stats modes: cheap ≡ exact ≡ off
+  // ------------------------------ observed stats against the plants
 
-  test("curateInterleavedMm: cheap stats ≡ exact stats (values identical, zero extra jobs), off emits -1 counts; survivors identical in all modes") {
-    val exact = runMm("exact")
-    val cheap = runMm("cheap")
-    val off = runMm("off")
-    val se = statsRows(exact)
-    val sc = statsRows(cheap)
-    val so = statsRows(off)
-    assert(se == sc, s"cheap stats must be value-identical to exact:\n$se\n$sc")
-    // Sanity on the exact side: 24 docs and 24 slots in, every planted
-    // class drops exactly one slot at its own stage.
-    val byStage = se.map(x => x._2 -> (x._3, x._4)).toMap
-    assert(byStage("input") == ((24L, 24L)))
-    assert(byStage("img_decode")._2 == byStage("img_explode")._2 - 1)
-    assert(byStage("img_exact_dedup")._2 == byStage("img_decode")._2 - 1)
-    assert(byStage("img_near_dedup")._2 == byStage("img_exact_dedup")._2 - 1)
-    assert(byStage("aud_decode")._2 == byStage("img_resize")._2 - 1)
-    assert(byStage("aud_exact_dedup")._2 == byStage("aud_decode")._2 - 1)
-    assert(byStage("aud_near_dedup")._2 == byStage("aud_exact_dedup")._2 - 1)
-    assert(byStage("vid_decode")._2 == byStage("aud_near_dedup")._2 - 1)
-    assert(byStage("vid_exact_dedup")._2 == byStage("vid_decode")._2 - 1)
-    assert(byStage("vid_near_dedup")._2 == byStage("vid_exact_dedup")._2 - 1)
-    assert(byStage("vid_profile_dedup")._2 == byStage("vid_near_dedup")._2 - 1)
+  /** The mmPlant's per-stage (docs, live slots): 24 docs with one slot
+    * each, every planted loser dropped at its own stage. */
+  private val mmPlanted = Seq(
+    "input" -> 24L, "fix_encoding" -> 24L, "html_extract" -> 24L,
+    "langid_filter" -> 24L, "quality_filter" -> 24L, "line_dedup" -> 24L,
+    "exact_dedup" -> 24L, "near_dedup" -> 24L,
+    "img_explode" -> 24L, "img_decode" -> 23L, "img_exact_dedup" -> 22L,
+    "img_near_dedup" -> 21L, "img_resize" -> 21L,
+    "aud_explode" -> 21L, "aud_decode" -> 20L, "aud_exact_dedup" -> 19L,
+    "aud_near_dedup" -> 18L,
+    "vid_explode" -> 18L, "vid_decode" -> 17L, "vid_exact_dedup" -> 16L,
+    "vid_near_dedup" -> 15L, "vid_profile_dedup" -> 14L,
+    "reassemble" -> 14L)
+    .zipWithIndex.map { case ((stage, slots), i) => (i, stage, 24L, slots, 0L) }
+
+  test("curateInterleavedMm: observed stats equal the planted per-stage drops; survivors as planted") {
+    val r = runMm()
+    assert(statsRows(r) == mmPlanted, s"\n${statsRows(r)}")
     // 24 slots minus the ten planted losers (img: garbage + byte copy +
     // resize copy; aud: garbage + byte copy + rescale; vid: garbage +
-    // byte copy + re-mux + re-encode).
-    assert(byStage("reassemble") == ((24L, 14L)))
-    // off: same stages in the same order, counts -1, capped still real.
-    assert(so.map(_._2) == se.map(_._2))
-    assert(so.forall(x => x._3 == -1L && x._4 == -1L))
-    assert(so.map(_._5) == se.map(_._5))
-    val want = survivors(exact)
-    assert(survivors(cheap) == want, "cheap mode changed the curated output")
-    assert(survivors(off) == want, "off mode changed the curated output")
+    // byte copy + re-mux + re-encode), every document kept.
+    val got = survivors(r)
+    assert(got.map(_._1) == (0L until 24L).toSet)
+    val dropped = Set(6L, 9L, 12L, 7L, 10L, 13L, 8L, 11L, 14L, 17L)
+    assert(got.filter(_._2.nonEmpty).map(_._1) == (0L until 24L).toSet -- dropped)
   }
 
   test("curateInterleavedMm: DISK_ONLY payload level is result-identical (stats and survivors)") {
-    val exact = runMm("exact")
-    val disk = runMm("cheap",
-      payloadLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    assert(statsRows(disk) == statsRows(exact))
-    assert(survivors(disk) == survivors(exact))
+    val dflt = runMm()
+    val disk = runMm(payloadLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    assert(statsRows(disk) == mmPlanted)
+    assert(statsRows(disk) == statsRows(dflt))
+    assert(survivors(disk) == survivors(dflt))
   }
 
-  test("curate: cheap stats ≡ exact stats including token sums; off emits -1; curated docs identical") {
+  test("curate: observed stats equal the planted row and token counts; curated docs as planted") {
     val P = graft.llm.Pipeline
     // 38 docs on the proven 3-marker template (near-dup-safe between
     // distinct ids): one exact dupe, one +1-token near dupe, one doc
@@ -151,54 +144,57 @@ class Round18Spec extends AnyFunSuite {
       else enGood(i)
     val docs = (0L until 38L).map(i => (i, body(i))).toDF("id", "text")
     val ev = Seq((100L, enGood(3))).toDF("id", "text")
-    def run(mode: String) = P.curate(docs, "id", "text", evalDocs = Some(ev),
-      cfg = P.Config(budgetTokens = 300L, statsMode = mode))
-    val exact = run("exact")
-    val cheap = run("cheap")
-    val off = run("off")
-    def rows(r: graft.llm.Pipeline.Result) = r.stats.orderBy("ord").collect()
+    val r = P.curate(docs, "id", "text", evalDocs = Some(ev),
+      cfg = P.Config(budgetTokens = 300L))
+    val kept = r.docs.select("id").collect().map(_.getLong(0)).toSet
+    // Planted survivors per stage; the budget keeps a strict subset.
+    val all = (0L until 38L).toSet
+    val decontaminated = all -- Set(36L, 37L, 3L)
+    assert(kept.subsetOf(decontaminated) && kept.size < decontaminated.size &&
+      kept.nonEmpty, kept.toString)
+    val live = Seq("input", "fix_encoding", "html_extract", "langid_filter",
+      "quality_filter", "line_dedup").map(_ -> all) ++ Seq(
+      "exact_dedup" -> (all - 36L), "near_dedup" -> (all -- Set(36L, 37L)),
+      "decontaminate" -> decontaminated, "token_budget" -> kept)
+    def tokens(ids: Set[Long]) = ids.toSeq.map(i => body(i).split(" ").length.toLong).sum
+    val want = live.zipWithIndex.map { case ((stage, ids), i) =>
+      (i, stage, ids.size.toLong, tokens(ids), 0L) }
+    val got = r.stats.orderBy("ord").collect()
       .map(x => (x.getInt(0), x.getString(1), x.getLong(2), x.getLong(3), x.getLong(5)))
       .toSeq
-    val se = rows(exact)
-    assert(se == rows(cheap), s"curate cheap≠exact:\n$se\n${rows(cheap)}")
-    val so = rows(off)
-    assert(so.map(_._2) == se.map(_._2))
-    assert(so.forall(x => x._3 == -1L && x._4 == -1L))
-    def ids(r: graft.llm.Pipeline.Result) =
-      r.docs.select("id").collect().map(_.getLong(0)).toSet
-    assert(ids(cheap) == ids(exact) && ids(off) == ids(exact))
-    // The stages that must have dropped rows did (the plant is live).
-    val m = se.map(x => x._2 -> x._3).toMap
-    assert(m("exact_dedup") == m("line_dedup") - 1, m.toString)
-    assert(m("near_dedup") == m("exact_dedup") - 1, m.toString)
-    assert(m("decontaminate") == m("near_dedup") - 1, m.toString)
-    assert(m("token_budget") < m("decontaminate"), m.toString)
-    // Token sums are real numbers, not zeros (the cheap leg must have
-    // aggregated the same token expression).
-    assert(se.forall(x => x._4 > 0))
+    assert(got == want, s"\n$got\n$want")
+    // The budget bounds the curated token total.
+    assert(tokens(kept) <= 300L)
   }
 
-  test("curateImages: cheap stats ≡ exact stats (rows and bytes)") {
+  test("curateImages: observed stats equal the planted rows and bytes") {
     val M = graft.llm.Multimodal
     val P = graft.llm.Pipeline
-    val imgs = (0L until 12L).map { i =>
+    val plant = (0L until 12L).map { i =>
       val bytes =
         if (i == 5L) M.encodeBlockImage(0L) // byte copy
         else if (i == 7L) M.resizeOne(M.encodeBlockImage(1L), 48, 48, "png")
         else if (i == 9L) s"junk-$i".getBytes("UTF-8")
         else M.encodeBlockImage(i)
       (i, bytes)
-    }.toDF("id", "img")
-    def run(mode: String) = P.curateImages(imgs, "id", "img",
-      P.ImageConfig(maxDistance = 2, statsMode = mode))
-    def rows(r: graft.llm.Pipeline.Result) = r.stats.orderBy("ord").collect()
+    }
+    val imgs = plant.toDF("id", "img")
+    val r = P.curateImages(imgs, "id", "img", P.ImageConfig(maxDistance = 2))
+    val payload = plant.toMap
+    def bytes(ids: Set[Long]) = ids.toSeq.map(payload(_).length.toLong).sum
+    val all = (0L until 12L).toSet
+    val survivors = all -- Set(9L, 5L, 7L)
+    val resized = survivors.toSeq.map(i => M.resizeOne(payload(i), 64, 64, "png").length.toLong).sum
+    val want = Seq(
+      ("input", 12L, bytes(all)), ("decode_phash", 11L, bytes(all - 9L)),
+      ("exact_dedup", 10L, bytes(all -- Set(9L, 5L))),
+      ("near_dedup", 9L, bytes(survivors)), ("resize", 9L, resized))
+      .zipWithIndex.map { case ((s, n, b), i) => (i, s, n, b) }
+    val got = r.stats.orderBy("ord").collect()
       .map(x => (x.getInt(0), x.getString(1), x.getLong(2), x.getLong(3))).toSeq
-    val se = rows(run("exact"))
-    assert(se == rows(run("cheap")), "image pipeline cheap≠exact")
-    assert(rows(run("off")).forall(x => x._3 == -1L && x._4 == -1L))
-    val m = se.map(x => x._2 -> x._3).toMap
-    assert(m("decode_phash") == 11L && m("exact_dedup") == 10L &&
-      m("near_dedup") == 9L && m("resize") == 9L, m.toString)
+    assert(got == want, s"\n$got\n$want")
+    assert(r.stats.columns.toSeq == Seq("ord", "stage", "rows_out", "bytes_out", "wall_sec"))
+    assert(r.docs.select("id").collect().map(_.getLong(0)).toSet == survivors)
   }
 
   // ------------------------------ id contract on the checkpointed input
@@ -209,7 +205,7 @@ class Round18Spec extends AnyFunSuite {
     val mediaA = Seq(M.encodeBlockImage(1L))
     def curate(df: org.apache.spark.sql.DataFrame) =
       P.curateInterleavedMm(df, "doc_id", "text", Seq("image" -> "images"),
-        P.InterleavedConfig(statsMode = "cheap"))
+        P.InterleavedConfig())
     // One id duplicated only on a NULL-text row (dropped before the
     // checkpoint): must succeed — the r17 check aggregated raw docs and
     // spuriously failed this shape.
@@ -330,7 +326,7 @@ class Round18Spec extends AnyFunSuite {
 
     // Pipeline stage: docs 0-9 clean, 10-11 PII-dense (a contact dump) —
     // the gate drops exactly those two, and the stats frame shows the
-    // stage (cheap mode: the new stage's counts also ride observe).
+    // stage.
     def enGood(i: Long) =
       s"w${i}a the quick brown fox jumps over the lazy dog w${i}b " +
         s"it was good that it is here and now w${i}c"
@@ -342,7 +338,7 @@ class Round18Spec extends AnyFunSuite {
       (i, t)
     }.toDF("id", "text")
     val r = P.curate(docs, "id", "text",
-      cfg = P.Config(piiMaxDensity = Some(0.2), statsMode = "cheap"))
+      cfg = P.Config(piiMaxDensity = Some(0.2)))
     val byStage = r.stats.collect().map(x => x.getString(1) -> x.getLong(2)).toMap
     assert(byStage("quality_filter") == 12L, byStage.toString)
     assert(byStage("pii_filter") == 10L, byStage.toString)
@@ -352,8 +348,7 @@ class Round18Spec extends AnyFunSuite {
       array().cast("array<binary>")).withColumnRenamed("id", "doc_id")
     val r2 = P.curateInterleavedMm(mdocs, "doc_id", "text",
       Seq("image" -> "images"),
-      P.InterleavedConfig(text = P.Config(piiMaxDensity = Some(0.2)),
-        statsMode = "cheap"))
+      P.InterleavedConfig(text = P.Config(piiMaxDensity = Some(0.2))))
     val by2 = r2.stats.collect().map(x => x.getString(1) -> x.getLong(2)).toMap
     assert(by2("pii_filter") == 10L, by2.toString)
   }
